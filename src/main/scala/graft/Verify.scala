@@ -70,6 +70,7 @@ object Verify {
             System.err.println(
               s"[verify] $name failed: rename $tmpDir -> $dstDir failed")
             org.apache.commons.io.FileUtils.deleteQuietly(dstDir): Unit
+            org.apache.commons.io.FileUtils.deleteQuietly(tmpDir): Unit
           }
         case Some(msg) =>
           System.err.println(s"[verify] $name failed: $msg")

@@ -2,7 +2,6 @@ package graft.cdc
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,45 +38,28 @@ final class PoisonEventException(val count: Long, val epochId: Long)
       "to dead-letter them")
 
 final case class MergeConfig(
-    /** Target max rows per output file; buckets whose merged size exceeds
-      * this are salted into multiple write tasks (skew defense). */
+    /** Target max rows per file written by a bucket fold (compaction,
+      * the copy-on-write fold, rebucket): a fold splits its output into
+      * ceil(input rows / maxRowsPerFile) files (skew defense). */
     maxRowsPerFile: Long = 4L * 1000 * 1000,
-    /** Physical write mode:
-      *  - "mor" (default, merge-on-read): an epoch writes ONLY its batch
-      *    as sorted per-bucket delta files — O(batch) bytes per epoch —
+    /** Physical write mode. Both modes write the epoch's batch as
+      * unsorted per-bucket delta files — O(batch) bytes — in the same
+      * single Spark action; they differ only in what happens next:
+      *  - "mor" (default, merge-on-read): the deltas commit as they are
       *    and readers resolve LWW across a bucket's files; buckets whose
-      *    delta count exceeds [[maxDeltaFilesPerBucket]] are compacted
-      *    back to a single base file. This is the update-heavy-CDC shape
-      *    (Hudi MoR / Iceberg v2 deletes): copy-on-write rewrites the
-      *    whole touched bucket every epoch — O(table) write
-      *    amplification when batches scatter across buckets.
-      *  - "cow" (copy-on-write): each epoch fully rewrites touched
-      *    buckets; reads are zero-cost (one version per key on disk). */
+      *    file count exceeds [[maxDeltaFilesPerBucket]] are compacted
+      *    back to base files after the commit. This is the
+      *    update-heavy-CDC shape (Hudi MoR / Iceberg v2 deletes).
+      *  - "cow" (copy-on-write): before committing, each touched bucket
+      *    (its live files plus the new deltas) is folded to base files
+      *    and the SAME commit replaces the bucket — reads are zero-cost
+      *    (one version per key on disk), at the price of rewriting the
+      *    whole touched bucket every epoch (O(table) write amplification
+      *    when batches scatter across buckets). */
     writeMode: String = "mor",
     /** MoR compaction trigger: max files per bucket before that bucket is
       * folded back to a single base file. */
     maxDeltaFilesPerBucket: Int = 8,
-    /** Concurrent per-bucket compaction jobs (driver-pool width). Size to
-      * keep the cluster's task slots fed: each job is one bucket's
-      * bounded fold, so a 1000-executor deployment compacting thousands
-      * of buckets wants this well above the local default. */
-    compactParallelism: Int = 8,
-    /** LWW dedup strategy — all three are semantically identical
-      * (MergeSpec asserts it); they differ in shuffle shape:
-      *  - "bucket" (default, the scale path): ONE shuffle of
-      *    current∪batch to (__bucket, __salt), sort within partition,
-      *    lag-window dedup under that same partitioning, files written
-      *    directly from the shuffled partitions. Valid because a key
-      *    group (conv_id, turn_idx) can never span buckets — bucket is a
-      *    function of conv_id alone.
-      *  - "aggregate": max_by hash aggregate keyed on (conv_id,
-      *    turn_idx); map-side partial aggregation collapses
-      *    duplicate-heavy feeds before the shuffle, but the write needs
-      *    a second shuffle back to bucket layout.
-      *  - "window": textbook row_number() over (partition by key order
-      *    by lsn desc) — shuffles by key AND sorts, plus the write
-      *    shuffle. Kept for A/B verification. */
-    dedup: String = "bucket",
     /** Duplicate-INPUT suppression (the reference's checksum-gated
       * re-runs, reference: engine/wprdc_etl/pipeline/connectors.py:73-93,
       * pipeline.py:338-341): when on, each batch's content fingerprint
@@ -133,30 +115,28 @@ final case class MergeConfig(
     wapId: Option[String] = None)
 
 /** The MERGE kernel (SURVEY.md §4 item 1, §7.1 item 4): applies one
-  * micro-batch of change events to a [[LakeTable]] as an idempotent,
-  * copy-on-write upsert keyed on `(conv_id, turn_idx)`.
+  * micro-batch of change events to a [[LakeTable]] as an idempotent
+  * last-writer-wins (LWW) upsert keyed on `(conv_id, turn_idx)` — the
+  * highest-`__lsn` event per key wins.
   *
   * Replaces the reference's server-side Postgres `datastore_upsert`
   * (reference: engine/wprdc_etl/pipeline/loaders.py:507-533) with a
   * distributed plan of built-in operators:
   *
-  *  1. **LWW dedup** of the batch: keep the max-LSN event per key. Done as
-  *     `max_by(struct(*), __lsn)` under `groupBy(key)` — a hash aggregate
-  *     with map-side partial aggregation, so duplicate-heavy or hot-key
-  *     batches collapse *before* the shuffle (a window sort — the textbook
-  *     formulation — shuffles every row; the aggregate is semantically
-  *     identical and strictly cheaper; both are implemented and tested
-  *     equal).
-  *  2. **Bucket pruning**: only the hash-buckets of `conv_id` present in
-  *     the batch are read back; all other files carry over by reference.
-  *  3. **Cross-batch LWW**: union current bucket contents (which retain
-  *     `__lsn` and `D` tombstones) with the batch and re-apply max_by — so
-  *     out-of-order delivery across batches resolves correctly, and a
-  *     delete cannot be resurrected by a late lower-LSN update.
-  *  4. **Salted write**: per-bucket output sizes are known *before* the
-  *     write (manifest row counts + batch per-bucket counts), so hot
-  *     buckets get extra write parallelism deterministically rather than
-  *     reactively.
+  *  1. **Delta write**: the batch is shuffled once to bucket layout and
+  *     written, unsorted and undeduplicated, as per-bucket delta files;
+  *     batch statistics and envelope validation ride the same action.
+  *  2. **Bucket pruning**: nothing outside the batch's buckets is read
+  *     or rewritten; all other files carry over by reference.
+  *  3. **Cross-batch LWW**, one rule in two places: readers resolve a
+  *     bucket's files with [[LakeTable.lwwResolve]], and
+  *     [[LakeTable.foldLww]] (compaction, and copy-on-write's in-commit
+  *     fold of the touched buckets) rewrites them to one version per
+  *     key. Both keep `D` tombstones, so out-of-order delivery resolves
+  *     correctly and a late lower-LSN update cannot resurrect a delete.
+  *  4. **Bounded files**: a fold sizes its output from the manifest's
+  *     row counts, ceil(rows / maxRowsPerFile) files per bucket, so hot
+  *     buckets are split deterministically rather than reactively.
   *  5. **Idempotent commit**: the epoch guard makes redelivered epochs
   *     no-ops (exactly-once on top of at-least-once).
   */
@@ -211,8 +191,9 @@ object MergeApply {
 
   /** Apply the table's opt-in bloom indexing
     * ([[graft.lake.LakeTable.BloomColumnsProp]]) to a FILE-GROUP-REWRITE
-    * writer (compaction / rebucket base files — never the per-epoch
-    * delta/COW hot path, which must stay lean). Adaptive sizing: parquet
+    * writer — every base-file fold: compaction, rebucket, and the
+    * copy-on-write fold of an epoch's touched buckets; never the
+    * per-epoch delta write, which must stay lean. Adaptive sizing: parquet
     * builds candidate blooms and keeps the one matching the file's
     * actual NDV, so small buckets don't pay a fixed-size filter.
     * Unknown/dropped column names are ignored (schema evolution may
@@ -260,12 +241,12 @@ object MergeApply {
 
   /** The one commit seam every merge path funnels through: publish the
     * outcome, or — under [[MergeConfig.wapId]] — park it as a staged WAP
-    * intent. Returns (resulting version, staged?); staged outcomes leave
-    * the table at `snap.version`. */
+    * intent. Returns the committed snapshot, or `None` when staged (the
+    * table stays at `snap.version`). */
   private def stageOrCommit(table: LakeTable, snap: Snapshot,
-      files: Seq[graft.lake.DataFileEntry], replaced: Set[Int],
+      files: Seq[DataFileEntry], replaced: Set[Int],
       epochId: Long, cfg: MergeConfig,
-      entry: graft.lake.LineageEntry): (Long, Boolean) = {
+      entry: LineageEntry): Option[Snapshot] = {
     val (eid, txn) = epochArgs(cfg, epochId)
     cfg.wapId match {
       case Some(id) =>
@@ -273,12 +254,20 @@ object MergeApply {
           snap.nBuckets, files, replaced.toSeq.sorted, eid,
           txn.map(_._1), txn.map(_._2), Some(entry),
           System.currentTimeMillis()))
-        (snap.version, true)
+        None
       case None =>
-        (table.commit(snap, files, replaced, eid, Some(entry),
-          txn = txn).version, false)
+        Some(table.commit(snap, files, replaced, eid, Some(entry), txn = txn))
     }
   }
+
+  /** Delete the (uncommitted) output dir `files` were written into —
+    * `data/<dir>/__bucket=N/part-*`. */
+  private def discard(table: LakeTable, files: Seq[DataFileEntry]): Unit =
+    if (files.nonEmpty) {
+      val dir = new Path(files.head.path).getParent.getParent
+      dir.getFileSystem(table.spark.sessionState.newHadoopConf())
+        .delete(dir, true): Unit
+    }
 
   /** Read the schema-event probe: (lsn, payload) of every op="S" row the
     * observed action saw. Collecting registry rows on the driver is
@@ -363,14 +352,10 @@ object MergeApply {
     * and returns the count for the commit's lineage row. */
   private def resolveInvalid(table: LakeTable, rawBatch: DataFrame,
       userSchema: StructType, epochId: Long, cfg: MergeConfig,
-      n: Long, written: Seq[graft.lake.DataFileEntry]): Long = {
+      n: Long, written: Seq[DataFileEntry]): Long = {
     if (n == 0L) return 0L
     if (cfg.invalidRows != "quarantine") {
-      if (written.nonEmpty) {
-        val dir = new Path(written.head.path).getParent.getParent
-        dir.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(dir, true)
-      }
+      discard(table, written)
       throw new PoisonEventException(n, epochId)
     }
     // writer identities can be arbitrary strings (the sink derives them
@@ -420,60 +405,6 @@ object MergeApply {
   private def lastChecksum(snap: Snapshot): Option[String] =
     snap.lineage.reverseIterator.find(_.inputChecksum.nonEmpty)
       .map(_.inputChecksum)
-
-  /** LWW by key shuffle: one row per key, the max-__lsn one ("aggregate"
-    * and "window" strategies; see [[MergeConfig.dedup]]). */
-  def dedupLww(df: DataFrame, cfg: MergeConfig): DataFrame = {
-    if (cfg.dedup == "window") {
-      val w = Window.partitionBy(KEY.map(col): _*).orderBy(col("__lsn").desc)
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-    } else {
-      val payload = df.columns.toSeq
-      df.groupBy(KEY.map(col): _*)
-        .agg(max_by(struct(payload.map(col): _*), col("__lsn")).as("__r"))
-        .select(col("__r.*"))
-    }
-  }
-
-  /** LWW under bucket partitioning — the single-shuffle scale path. Input
-    * must carry `__bucket`; each output partition is sorted, so the
-    * subsequent `partitionBy("__bucket")` write needs no further
-    * exchange. `salt` splits hot buckets by hash(turn_idx) — a key group
-    * still maps to exactly one (bucket, salt) pair, so dedup stays
-    * correct.
-    *
-    * Unsalted shuffle target: `repartition(nBuckets, conv_id)` — the
-    * exact bucket function (see the mergeMor scaladoc), so partition i
-    * holds exactly bucket i: no balls-in-bins imbalance, and the lag
-    * window clusters by conv_id (HashPartitioning(conv_id) satisfies it
-    * with NO extra exchange; a key group lives inside its conv group).
-    * Salted: the (bucket, salt) cell layout is kept — a cell must map
-    * to one write task for the per-file size bound, and with nB·salt
-    * cells over the partitions the imbalance averages out. An explicit
-    * partition count in both cases: an AQE-coalesced exchange would
-    * re-merge cells and undo the bound. */
-  def dedupLwwBucketed(df: DataFrame, salt: Int, nBuckets: Int): DataFrame = {
-    val shufP = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (salt <= 1) {
-      val w = Window.partitionBy(col("conv_id"))
-        .orderBy(col("turn_idx").asc, col("__lsn").desc)
-      df.repartition(nBuckets, col("conv_id"))
-        .withColumn("__prev", lag(col("turn_idx"), 1).over(w))
-        .filter(col("__prev").isNull || col("__prev") =!= col("turn_idx"))
-        .drop("__prev")
-    } else {
-      val saltCol = pmod(hash(col("turn_idx")), lit(salt))
-      val w = Window.partitionBy(col("__bucket"), col("__salt"))
-        .orderBy(col("conv_id").asc, col("turn_idx").asc, col("__lsn").desc)
-      val k = struct(col("conv_id"), col("turn_idx"))
-      df.withColumn("__salt", saltCol)
-        .repartition(math.max(shufP, salt), col("__bucket"), col("__salt"))
-        .withColumn("__prev", lag(k, 1).over(w))
-        .filter(col("__prev").isNull || col("__prev") =!= k)
-        .drop("__prev", "__salt")
-    }
-  }
 
   /** Apply one batch. `batch` must have the change-event envelope columns
     * (`lsn`, `op`, key + payload). Returns a no-op result if `epochId` was
@@ -531,10 +462,11 @@ object MergeApply {
             val entry = LineageEntry(epochId, snap.version + 1, fpRows, 0L,
               Nil, 0, snap.files.size, -1L, "",
               (System.nanoTime() - t0) / 1000000L, inputChecksum = fp)
-            val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-              epochId, cfg, entry)
-            return MergeResult(applied = false, v, fpRows, 0L, Nil,
-              (System.nanoTime() - t0) / 1000000L, staged = staged)
+            val c = stageOrCommit(table, snap, Nil, Set.empty, epochId,
+              cfg, entry)
+            return MergeResult(applied = false, c.fold(snap.version)(_.version),
+              fpRows, 0L, Nil, (System.nanoTime() - t0) / 1000000L,
+              staged = c.isEmpty)
           }
         }
         return mergeGuarded(table, batch, epochId, cfg, t0, fp)
@@ -592,15 +524,25 @@ object MergeApply {
     }
   }
 
-  /** One merge attempt. When `probe` is set the batch MAY contain
-    * schema-registry rows (op = "S"): rather than paying a dedicated
-    * detection action up front (one extra Spark job per v2 batch, schema
-    * events present or not), their (lsn, payload) ride an `Observation`
-    * on the first action the merge already runs. A non-empty observation
-    * aborts the attempt BEFORE anything commits — any uncommitted delta
-    * files are discarded — and returns the events for [[merge]] to apply
-    * and retry. Schema events are a handful in 10^10, so the common v2
-    * path pays zero extra actions and the rare path pays one redo. */
+  /** One merge attempt: ONE Spark action writes the batch as per-bucket
+    * delta files — nothing existing is read or rewritten. Batch statistics
+    * for lineage ride on the same action via `observe` (no separate stats
+    * job — per-epoch driver constants were measured to cap local scaling
+    * long before CPU did). Merge-on-read then commits the deltas and folds
+    * buckets whose file count exceeds the compaction threshold back to
+    * base files; copy-on-write instead folds every touched bucket (its
+    * live files plus the new deltas) with the compaction kernel and
+    * commits the fold in place of the deltas, replacing those buckets.
+    *
+    * When `probe` is set the batch MAY contain schema-registry rows
+    * (op = "S"): rather than paying a dedicated detection action up front
+    * (one extra Spark job per v2 batch, schema events present or not),
+    * their (lsn, payload) ride an `Observation` on the write action. A
+    * non-empty observation aborts the attempt BEFORE anything commits —
+    * the uncommitted delta files are discarded — and returns the events
+    * for [[merge]] to apply and retry. Schema events are a handful in
+    * 10^10, so the common v2 path pays zero extra actions and the rare
+    * path pays one redo. */
   private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
       cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String = "")
       : Either[Seq[(Long, String)], MergeResult] = {
@@ -614,33 +556,12 @@ object MergeApply {
         (observed.filter(col("op") =!= "S"), Some(obs))
       } else (batch.filter(col("op") =!= "S"), None)
     val snap = table.snapshot
-    val spark = table.spark
     val nB = snap.nBuckets
 
-    // envelope validation rides the first action (observe + filter — no
-    // extra job); resolved by invalidAfterAction once that action ran
+    // envelope validation rides the write action (observe + filter — no
+    // extra job); resolved once that action ran
     val (dataBatch, invalidObs) =
       validationWrap(dataBatch0, snap.userSchema, cfg)
-    def invalidAfterAction(written: Seq[graft.lake.DataFileEntry]): Long =
-      resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-        invalidObs.flatMap(_.get.get("invalid")).flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L), written)
-    // ZERO-OUTPUT paths only: when the validation/S filters leave nothing
-    // to write, the action may run zero tasks and BOTH observations
-    // resolve to empty maps (a local-relation batch even folds its
-    // filters at optimization time) — an S event or a poison row must
-    // not vanish into a 0-row commit. These eager twins re-check with
-    // dedicated (tiny) actions; the non-empty hot path never calls them.
-    def eagerSEvents(): Seq[(Long, String)] =
-      if (probeObs.isEmpty) Nil
-      else batch.filter(col("op") === "S").select(col("lsn"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    def invalidEager(): Long =
-      if (invalidObs.isEmpty) 0L
-      else resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-        dataBatch0.where(
-          invalidReasonExpr(dataBatch0, snap.userSchema).isNotNull).count(),
-        Nil)
 
     val timing = sys.env.contains("GRAFT_MERGE_TIMING")
     var tPhase = System.nanoTime()
@@ -649,129 +570,6 @@ object MergeApply {
       tPhase = System.nanoTime()
     }
 
-    val useBucket = cfg.dedup == "bucket"
-    val batchNorm = normalize(dataBatch, snap.userSchema)
-      .withColumn("__bucket", LakeTable.bucketExpr(nB))
-
-    if (cfg.writeMode == "mor")
-      return mergeMor(table, batchNorm, epochId, cfg, snap, t0, lap, probeObs,
-        checksum, invalidAfterAction, () => eagerSEvents(), () => invalidEager())
-
-    // bucket strategy: no pre-dedup of the batch — intra-batch duplicates
-    // collapse in the single bucket-level pass below (stats then count
-    // delivered events, which is what lineage should record anyway).
-    // Also no persist: the batch is consumed exactly twice (stats + the
-    // merge shuffle) and a second columnar parquet scan is cheaper than
-    // materializing a row cache (measured: caching 2M-row batches cost
-    // seconds of GC-driven driver stall per epoch).
-    val deduped =
-      if (useBucket) batchNorm
-      else dedupLww(batchNorm, cfg).persist()
-    try {
-      // one job: per-bucket batch stats (buckets touched + sizes + lineage)
-      val tsCol = eventTimeCol(snap)
-      val prevWm = snap.lineage.reverseIterator
-        .find(e => e.epochId >= 0 && e.watermarkTs.nonEmpty).map(_.watermarkTs)
-      val lateCol = (for { c <- tsCol; w <- prevWm } yield
-        count(when(col(c) < lit(w).cast(TimestampType), 1)))
-        .getOrElse(lit(0L)).as("late")
-      val maxTsCol = tsCol.map(c => date_format(max(col(c)), TsFmt))
-        .getOrElse(max(lit(null).cast(TimestampType)).cast(StringType))
-        .as("maxTs")
-      val stats = deduped.groupBy(col("__bucket"))
-        .agg(count(lit(1)).as("n"), max(col("__lsn")).as("maxLsn"),
-          maxTsCol, lateCol,
-          min(col("__lsn")).as("minLsn"))
-        .collect()
-      lap("dedup+stats")
-      // probe rides the stats action: in COW the abort costs nothing —
-      // no files have been written yet
-      val sev = probeEvents(probeObs)
-      if (sev.nonEmpty) return Left(sev)
-      if (stats.isEmpty) {
-        // zero stats groups ⇒ the action may have run zero tasks and the
-        // observations resolved empty — re-check schema events and poison
-        // rows eagerly, exactly like the MoR zero-output branch
-        val sevE = eagerSEvents()
-        if (sevE.nonEmpty) return Left(sevE)
-        val rejected = invalidEager()
-        val entry = LineageEntry(epochId, snap.version + 1, 0L, 0L, Nil, 0,
-          snap.files.size, -1L, "", (System.nanoTime() - t0) / 1000000L,
-          inputChecksum = checksum, rejectedEvents = rejected)
-        val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-          epochId, cfg, entry)
-        return Right(MergeResult(applied = !staged, v, 0L, 0L,
-          Nil, (System.nanoTime() - t0) / 1000000L, staged = staged,
-          rejectedEvents = rejected))
-      }
-      // envelope validation resolved on the same stats action; COW has
-      // written nothing yet, so fail mode has nothing to reclaim
-      val rejected = invalidAfterAction(Nil)
-      val buckets = stats.map(_.getInt(0)).toSet
-      val batchRows = stats.map(_.getLong(1)).sum
-      val maxLsn = stats.map(_.getLong(2)).max
-      val tsVals = stats.flatMap(r => Option(r.get(3))).map(_.toString)
-      val maxTs = if (tsVals.isEmpty) "" else tsVals.max
-      val late = stats.map(r => if (r.isNullAt(4)) 0L else r.getLong(4)).sum
-      val minLsn = stats.map(_.getLong(5)).min
-
-      val currentPerBucket: Map[Int, Long] = snap.files
-        .filter(f => buckets.contains(f.bucket))
-        .groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rows).sum }
-      val batchPerBucket: Map[Int, Long] =
-        stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val worstBucket = buckets.map(b =>
-        currentPerBucket.getOrElse(b, 0L) + batchPerBucket(b)).max
-      val salt = math.max(1L,
-        (worstBucket + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-
-      val current = table.readRawSnap(snap, Some(buckets))
-        .withColumn("__bucket", LakeTable.bucketExpr(nB))
-      val unioned = current.unionByName(deduped)
-      val merged =
-        if (useBucket) dedupLwwBucketed(unioned, salt, nB)
-        else dedupLww(unioned, cfg)
-
-      val newFiles = writeBuckets(table, merged, salt, snap,
-        prePartitioned = useBucket)
-        .map(_.copy(rewrite = true)) // COW carries old rows into new files
-      lap("cow-write")
-      val entry = LineageEntry(epochId, snap.version + 1,
-        batchRows, batchRows, buckets.toSeq.sorted, newFiles.size,
-        snap.files.count(f => !buckets.contains(f.bucket)), maxLsn, maxTs,
-        (System.nanoTime() - t0) / 1000000L, lateEvents = late,
-        minLsn = minLsn,
-        // from the per-bucket stats pass, NOT the written files: COW
-        // rewrites whole buckets, so file rows include carried-over
-        // rows — the batch's share per bucket is what lineage records
-        partitions = stats.map(r => BucketLineage(r.getInt(0),
-          r.getLong(1), r.getLong(5), r.getLong(2))).toSeq.sortBy(_.bucket),
-        inputChecksum = checksum,
-        watermarkCol = tsCol.getOrElse(""), rejectedEvents = rejected)
-      val (v, staged) = stageOrCommit(table, snap, newFiles, buckets,
-        epochId, cfg, entry)
-      Right(MergeResult(applied = !staged, v, batchRows,
-        batchRows, buckets.toSeq.sorted,
-        (System.nanoTime() - t0) / 1000000L, staged = staged,
-        rejectedEvents = rejected))
-    } finally if (!useBucket) deduped.unpersist()
-  }
-
-  /** Merge-on-read apply: ONE Spark action per epoch — LWW-dedup the
-    * batch under bucket partitioning and write it as per-bucket delta
-    * files; nothing existing is read or rewritten. Batch statistics for
-    * lineage ride on the same action via `observe` (no separate stats
-    * job — per-epoch driver constants were measured to cap local scaling
-    * long before CPU did). Buckets whose file count then exceeds the
-    * compaction threshold are folded back to base files. */
-  private def mergeMor(table: LakeTable, batchNorm: DataFrame, epochId: Long,
-      cfg: MergeConfig, snap: Snapshot, t0: Long, lap: String => Unit,
-      probeObs: Option[org.apache.spark.sql.Observation] = None,
-      checksum: String = "",
-      invalidAfterAction: Seq[DataFileEntry] => Long = _ => 0L,
-      eagerSEvents: () => Seq[(Long, String)] = () => Nil,
-      invalidEager: () => Long = () => 0L)
-      : Either[Seq[(Long, String)], MergeResult] = {
     // previous commit's event-time high-watermark -> late-data metric
     // (rides on the same observe; no extra job). Compaction entries
     // (epochId = -1) carry no watermark and are skipped.
@@ -786,9 +584,11 @@ object MergeApply {
         .as("maxTs")) ++
       (for { c <- tsCol; w <- prevWm } yield
         count(when(col(c) < lit(w).cast(TimestampType), 1)).as("late"))
-    val observed = batchNorm.observe(obs, aggs.head, aggs.tail: _*)
+    val observed = normalize(dataBatch, snap.userSchema)
+      .withColumn("__bucket", LakeTable.bucketExpr(nB))
+      .observe(obs, aggs.head, aggs.tail: _*)
     // no dedup, no sort: a delta file may hold several versions of a key
-    // (even intra-batch) — the read path LWW-resolves and compaction
+    // (even intra-batch) — the read path LWW-resolves and every fold
     // folds, both by __lsn, so deferring is exactly as correct and the
     // epoch's critical path is scan -> shuffle-to-bucket -> write.
     // Shuffle TARGET: repartition(nBuckets, conv_id) — Spark's hash
@@ -800,101 +600,128 @@ object MergeApply {
     // epoch's dominant stage; identity alignment keeps every write task
     // equally loaded and each task writes exactly one __bucket=N dir.
     val deltaFiles = writeBuckets(table,
-      observed.repartition(snap.nBuckets, col("conv_id")), salt = 1, snap,
+      observed.repartition(nB, col("conv_id")), salt = 1, snap,
       prePartitioned = true, kind = "delta")
-    lap("mor-delta-write")
+    lap("delta-write")
     // the schema probe rode the same write action; abort before commit
     // if registry rows surfaced, discarding the uncommitted delta files
     val sev = probeEvents(probeObs)
     if (sev.nonEmpty) {
-      if (deltaFiles.nonEmpty) {
-        val dir = new Path(deltaFiles.head.path).getParent.getParent
-        dir.getFileSystem(table.spark.sessionState.newHadoopConf())
-          .delete(dir, true)
-      }
+      discard(table, deltaFiles)
       return Left(sev)
     }
     // a zero-output batch (a truly empty micro-batch — streaming restarts
     // trigger those for metadata-only offset changes — OR a batch whose
     // rows were ALL consumed by the S/validation filters) may have run
-    // zero tasks, resolving both observations to empty maps. Re-check
-    // schema events and poison rows with the eager twins before
-    // committing the 0-row entry: a widen event arriving in the same
-    // batch as the first value needing it is EXACTLY this shape (the
-    // value is invalid pre-widen, so the filter empties the batch). The
-    // epoch must still land — the committed-epoch watermark stays
-    // CONTIGUOUS (a skipped epoch id would hold the watermark back
-    // forever and defeat the bounded recent-set guard); the COW path
-    // (stats.isEmpty) does the same.
+    // zero tasks, resolving both observations to empty maps (a
+    // local-relation batch even folds its filters at optimization time)
+    // — an S event or a poison row must not vanish into a 0-row commit.
+    // Re-check both with dedicated (tiny) actions before committing the
+    // 0-row entry: a widen event arriving in the same batch as the first
+    // value needing it is EXACTLY this shape (the value is invalid
+    // pre-widen, so the filter empties the batch). The epoch must still
+    // land — the committed-epoch watermark stays CONTIGUOUS (a skipped
+    // epoch id would hold the watermark back forever and defeat the
+    // bounded recent-set guard).
     if (deltaFiles.isEmpty) {
-      val sevE = eagerSEvents()
+      val sevE =
+        if (probeObs.isEmpty) Nil
+        else batch.filter(col("op") === "S").select(col("lsn"), col("text"))
+          .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       if (sevE.nonEmpty) return Left(sevE) // nothing written: no cleanup
-      val rejected = invalidEager()
+      val rejected =
+        if (invalidObs.isEmpty) 0L
+        else resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
+          dataBatch0.where(
+            invalidReasonExpr(dataBatch0, snap.userSchema).isNotNull).count(),
+          Nil)
       val entry = LineageEntry(epochId, snap.version + 1, 0L, 0L, Nil, 0,
         snap.files.size, -1L, "", (System.nanoTime() - t0) / 1000000L,
         inputChecksum = checksum, rejectedEvents = rejected)
-      val (v, staged) = stageOrCommit(table, snap, Nil, Set.empty,
-        epochId, cfg, entry)
-      return Right(MergeResult(applied = !staged, v, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L, staged = staged,
+      val c = stageOrCommit(table, snap, Nil, Set.empty, epochId, cfg, entry)
+      return Right(MergeResult(applied = c.nonEmpty,
+        c.fold(snap.version)(_.version), 0L, 0L, Nil,
+        (System.nanoTime() - t0) / 1000000L, staged = c.isEmpty,
         rejectedEvents = rejected))
     }
     // envelope validation resolved on the write action (files exist, so
     // tasks ran and the observation is authoritative): fail mode reclaims
     // the uncommitted deltas and throws; quarantine mode dead-letters the
     // invalid events and applies the valid remainder
-    val rejected = invalidAfterAction(deltaFiles)
+    val rejected = resolveInvalid(table, dataBatch0, snap.userSchema,
+      epochId, cfg, invalidObs.flatMap(_.get.get("invalid"))
+        .flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
+      deltaFiles)
     val m = obs.get
     val batchRows = m("rows").asInstanceOf[Long]
-    val maxLsn = Option(m("maxLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val minLsn = Option(m("minLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    val maxTs = Option(m("maxTs")).map(_.toString).getOrElse("")
-    val late = m.get("late").flatMap(Option(_)).map(_.asInstanceOf[Long])
-      .getOrElse(0L)
     val buckets = deltaFiles.map(_.bucket).distinct.sorted
-    val entry = LineageEntry(epochId, snap.version + 1, batchRows, batchRows,
-      buckets, deltaFiles.size, snap.files.size, maxLsn, maxTs,
-      (System.nanoTime() - t0) / 1000000L, lateEvents = late, minLsn = minLsn,
-      // delta files hold exactly this batch, so the manifest entries ARE
-      // the per-partition applied rows + LSN ranges (footer stats)
+    def entry(filesWritten: Int, filesCarried: Int) = LineageEntry(epochId,
+      snap.version + 1, batchRows, batchRows, buckets, filesWritten,
+      filesCarried, Option(m("maxLsn")).map(_.asInstanceOf[Long])
+        .getOrElse(-1L), Option(m("maxTs")).map(_.toString).getOrElse(""),
+      (System.nanoTime() - t0) / 1000000L,
+      lateEvents = m.get("late").flatMap(Option(_))
+        .map(_.asInstanceOf[Long]).getOrElse(0L),
+      minLsn = Option(m("minLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L),
+      // delta files hold exactly this batch, so their manifest entries ARE
+      // the batch's per-partition applied rows + LSN ranges (footer stats)
+      // — in both modes, even though COW commits the fold instead
       partitions = partitionsOf(deltaFiles), inputChecksum = checksum,
       watermarkCol = tsCol.getOrElse(""), rejectedEvents = rejected)
-    if (cfg.wapId.nonEmpty) {
-      val (v, _) = stageOrCommit(table, snap, deltaFiles, Set.empty,
-        epochId, cfg, entry)
-      // no compaction: nothing committed — the staged deltas fold (if
-      // over threshold) in the first post-publish epoch's sweep
-      return Right(MergeResult(applied = false, v, batchRows, batchRows,
-        buckets, (System.nanoTime() - t0) / 1000000L, staged = true,
-        rejectedEvents = rejected))
-    }
-    val (eid, txn) = epochArgs(cfg, epochId)
-    val committed = table.commit(snap, deltaFiles, Set.empty, eid,
-      Some(entry), txn = txn)
+    def result(committed: Option[Snapshot], version: Long) =
+      MergeResult(applied = committed.nonEmpty, version, batchRows, batchRows,
+        buckets, (System.nanoTime() - t0) / 1000000L,
+        staged = committed.isEmpty, rejectedEvents = rejected)
 
-    // amortized compaction: fold over-threshold buckets back to base
-    val perBucket = committed.files.groupBy(_.bucket)
-    val toCompact = perBucket.collect {
-      case (b, fs) if fs.size > cfg.maxDeltaFilesPerBucket => b
-    }.toSet
-    if (toCompact.nonEmpty) {
-      // compaction is state-neutral housekeeping: if a concurrent writer
-      // lands a delta in a bucket mid-fold, yield — the ingest wins, and
-      // the still-over-threshold bucket retriggers next epoch
+    if (cfg.writeMode == "cow") {
+      // fold each touched bucket — its live files plus the deltas — and
+      // commit (or stage) the fold in place of both, replacing the
+      // buckets. The fold carries this epoch's arrivals, so it is stamped
+      // rewrite but NOT fold: a change window starting at this commit's
+      // parent must still read it. A racer into a touched bucket makes
+      // the commit conflict and merge() recomputes; the deltas are
+      // consumed either way.
+      val touched = buckets.toSet
       try {
-        compactBuckets(table, toCompact, cfg, at = Some(committed))
-        lap(s"mor-compact(${toCompact.size})")
-      } catch { case _: graft.lake.CommitConflictException => () }
+        val folded = foldBuckets(table, snap,
+          snap.files.filter(f => touched.contains(f.bucket)) ++ deltaFiles,
+          cfg.maxRowsPerFile).map(_.copy(rewrite = true))
+        lap("cow-fold")
+        val carried = snap.files.count(f => !touched.contains(f.bucket))
+        val c = stageOrCommit(table, snap, folded, touched, epochId, cfg,
+          entry(folded.size, carried))
+        return Right(result(c, c.fold(snap.version)(_.version)))
+      } finally discard(table, deltaFiles)
     }
-    Right(MergeResult(applied = true, table.snapshot.version, batchRows,
-      batchRows, buckets, (System.nanoTime() - t0) / 1000000L,
-      rejectedEvents = rejected))
+    stageOrCommit(table, snap, deltaFiles, Set.empty, epochId, cfg,
+      entry(deltaFiles.size, snap.files.size)) match {
+      // staged: nothing committed — the staged deltas fold (if over
+      // threshold) in the first post-publish epoch's sweep
+      case None => Right(result(None, snap.version))
+      case Some(committed) =>
+        // amortized compaction: fold over-threshold buckets back to base
+        val toCompact = committed.files.groupBy(_.bucket).collect {
+          case (b, fs) if fs.size > cfg.maxDeltaFilesPerBucket => b
+        }.toSet
+        if (toCompact.nonEmpty) {
+          // compaction is state-neutral housekeeping: if a concurrent
+          // writer lands a delta in a bucket mid-fold, yield — the ingest
+          // wins, and the still-over-threshold bucket retriggers next epoch
+          try {
+            compactBuckets(table, toCompact, cfg, at = Some(committed))
+            lap(s"mor-compact(${toCompact.size})")
+          } catch { case _: graft.lake.CommitConflictException => () }
+        }
+        Right(result(Some(committed), table.snapshot.version))
+    }
   }
 
-  /** Fold all files of the given buckets back to base files (per-bucket
-    * LWW; tombstones are retained — a tombstone may still out-LSN a late
-    * update from a not-yet-seen epoch). Commits its own snapshot (no
-    * epoch id: compaction is state-neutral).
+  /** Fold `files` bucket by bucket with [[LakeTable.foldLww]] into base
+    * files under one fresh output dir, sized ceil(input rows /
+    * `maxRowsPerFile`) files per bucket, and return their manifest
+    * entries — unstamped and uncommitted: the caller decides what the
+    * rewrite is. Buckets whose rows all drop (only under `purgeRewrite`)
+    * yield no entry.
     *
     * Plan shape: one INDEPENDENT job per bucket, submitted concurrently
     * from a bounded driver pool. A bucket's rows live only in that
@@ -913,6 +740,32 @@ object MergeApply {
     * per-bucket jobs win at every core count on this box — compaction
     * seconds 54/17.5/13.2 vs 64/25.7/13.5 at 1/4/8 cores, 8M events —
     * because the hash-agg fold skips the window sort entirely. */
+  private def foldBuckets(table: LakeTable, snap: Snapshot,
+      files: Seq[DataFileEntry], maxRowsPerFile: Long,
+      purgeRewrite: Option[DataFrame => DataFrame] = None)
+      : Seq[DataFileEntry] = {
+    val outDir = s"${table.dir}/data/compact-${snap.version + 1}-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    LakeTable.parMap(files.groupBy(_.bucket).toSeq, LakeTable.FoldPoolWidth) {
+      case (b, fs) =>
+        val raw0 = table.readFiles(snap, fs)
+        val raw = purgeRewrite.fold(raw0)(f => f(raw0))
+        val preRows = fs.map(_.rows).sum // upper bound on folded rows
+        val nFiles = math.max(1L,
+          (preRows + maxRowsPerFile - 1) / maxRowsPerFile).toInt
+        withBloom(LakeTable.foldLww(raw).repartition(nFiles).write, snap)
+          .mode("overwrite").parquet(s"$outDir/__bucket=$b")
+    }
+    listDataFiles(table.spark, outDir, snap.currentSchemaVersion, "base",
+      tsCol = eventTimeCol(snap))
+      // rows == 0 happens only under purgeRewrite (a bucket fully
+      // erased): retire the bucket with no replacement, not an empty file
+      .filter(_.rows > 0)
+  }
+
+  /** Fold all files of the given buckets back to base files (per-bucket
+    * LWW via [[foldBuckets]]; tombstones are retained). Commits its own
+    * snapshot (no epoch id: compaction is state-neutral). */
   def compactBuckets(table: LakeTable, buckets: Set[Int],
       cfg: MergeConfig = MergeConfig(),
       /** Fold against THIS snapshot instead of re-reading CURRENT —
@@ -933,43 +786,13 @@ object MergeApply {
         * replacement files. */
       purgeRewrite: Option[DataFrame => DataFrame] = None): Snapshot = {
     val snap = at.getOrElse(table.snapshot)
-    val spark = table.spark
-    val outDir = s"${table.dir}/data/compact-${snap.version + 1}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val perBucket: Map[Int, Seq[DataFileEntry]] = snap.files
-      .filter(f => buckets.contains(f.bucket)).groupBy(_.bucket)
-    if (perBucket.isEmpty) return snap
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(math.max(1, cfg.compactParallelism), perBucket.size))
-    try {
-      perBucket.toSeq.map { case (b, fs) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val raw0 = table.readFiles(snap, fs)
-            val raw = purgeRewrite.fold(raw0)(f => f(raw0))
-            val payload = raw.columns.toSeq
-            val folded = raw.groupBy(KEY.map(col): _*)
-              .agg(max_by(struct(payload.map(col): _*), col("__lsn"))
-                .as("__r"))
-              .select(col("__r.*"))
-            val preRows = fs.map(_.rows).sum // upper bound on folded rows
-            val nFiles = math.max(1L,
-              (preRows + cfg.maxRowsPerFile - 1) / cfg.maxRowsPerFile).toInt
-            withBloom(folded.repartition(nFiles).write, snap)
-              .mode("overwrite").parquet(s"$outDir/__bucket=$b")
-          }
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-    val files = listDataFiles(spark, outDir, snap.currentSchemaVersion,
-      "base", tsCol = eventTimeCol(snap))
-      // folds carry ONLY old rows into new files (state-neutral rewrite);
-      // fold=true lets arrival windows starting at this commit's parent
-      // skip them outright instead of re-upserting the whole bucket.
-      // rows == 0 happens only under purgeRows (a bucket fully erased):
-      // retire the bucket with no replacement instead of an empty file
-      .filter(_.rows > 0)
-      .map(_.copy(rewrite = true, fold = true))
+    val inBuckets = snap.files.filter(f => buckets.contains(f.bucket))
+    if (inBuckets.isEmpty) return snap
+    // folds carry ONLY old rows into new files (state-neutral rewrite);
+    // fold=true lets arrival windows starting at this commit's parent
+    // skip them outright instead of re-upserting the whole bucket
+    val files = foldBuckets(table, snap, inBuckets, cfg.maxRowsPerFile,
+      purgeRewrite).map(_.copy(rewrite = true, fold = true))
     val entry = LineageEntry(-1L, snap.version + 1, 0L, 0L,
       buckets.toSeq.sorted, files.size,
       snap.files.count(f => !buckets.contains(f.bucket)), -1L, "",
@@ -1015,52 +838,36 @@ object MergeApply {
     val spark = table.spark
     val outDir = s"${table.dir}/data/rebucket-${snap.version + 1}-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val hfs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val hfs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
 
-    def readGroup(group: Seq[graft.lake.DataFileEntry]): DataFrame =
-      table.readFiles(snap, group)
-    def foldToNew(raw: DataFrame): DataFrame = {
-      val payload = raw.columns.toSeq
-      raw.groupBy(KEY.map(col): _*)
-        .agg(max_by(struct(payload.map(col): _*), col("__lsn")).as("__r"))
-        .select(col("__r.*"))
-        .withColumn("__bucket", LakeTable.bucketExpr(newN))
-    }
+    def foldToNew(raw: DataFrame): DataFrame =
+      LakeTable.foldLww(raw).withColumn("__bucket", LakeTable.bucketExpr(newN))
 
-    val newFiles: Seq[graft.lake.DataFileEntry] =
+    val newFiles: Seq[DataFileEntry] =
       if (snap.files.isEmpty) Seq.empty
       else if (newN % snap.nBuckets == 0) {
-        val perBucket = snap.files.groupBy(_.bucket)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(math.max(1, cfg.compactParallelism), perBucket.size))
-        try {
-          perBucket.toSeq.map { case (b, group) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                // stage under a per-job dir, then promote the new-bucket
-                // dirs (exclusively this job's — the fan-out sets are
-                // disjoint across old buckets) to the shared root
-                val tmp = new org.apache.hadoop.fs.Path(s"$outDir/stage-$b")
-                withBloom(foldToNew(readGroup(group)).write, snap)
-                  .partitionBy("__bucket").mode("overwrite")
-                  .parquet(tmp.toString)
-                hfs.listStatus(tmp)
-                  .filter(_.getPath.getName.startsWith("__bucket="))
-                  .foreach { d =>
-                    if (!hfs.rename(d.getPath, new org.apache.hadoop.fs
-                        .Path(outDir, d.getPath.getName)))
-                      sys.error(s"could not promote ${d.getPath}")
-                  }
-                hfs.delete(tmp, true): Unit
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
+        LakeTable.parMap(snap.files.groupBy(_.bucket).toSeq,
+            LakeTable.FoldPoolWidth) { case (b, group) =>
+          // stage under a per-job dir, then promote the new-bucket dirs
+          // (exclusively this job's — the fan-out sets are disjoint
+          // across old buckets) to the shared root
+          val tmp = new Path(s"$outDir/stage-$b")
+          withBloom(foldToNew(table.readFiles(snap, group)).write, snap)
+            .partitionBy("__bucket").mode("overwrite")
+            .parquet(tmp.toString)
+          hfs.listStatus(tmp)
+            .filter(_.getPath.getName.startsWith("__bucket="))
+            .foreach { d =>
+              if (!hfs.rename(d.getPath, new Path(outDir, d.getPath.getName)))
+                sys.error(s"could not promote ${d.getPath}")
+            }
+          hfs.delete(tmp, true): Unit
+        }
         listDataFiles(spark, outDir, snap.currentSchemaVersion, "base",
           tsCol = eventTimeCol(snap))
       } else {
-        // misaligned target: one table-wide bucket exchange
+        // misaligned target: one table-wide bucket exchange, salted so
+        // no file exceeds maxRowsPerFile
         val folded = foldToNew(table.readRawSnap(snap, None))
         val totalRows = snap.files.map(_.rows).sum
         val salt = math.max(1L, (totalRows / math.max(1, newN) +
@@ -1164,17 +971,14 @@ object MergeApply {
       validationWrap(dataBatch0, snap.userSchema, cfg)
     val norm = normalize(dataBatch, snap.userSchema)
       .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    val useBucket = cfg.dedup == "bucket"
-    val deduped =
-      if (useBucket) dedupLwwBucketed(norm, 1, snap.nBuckets)
-      else dedupLww(norm, cfg)
     // registered as deltas: append guarantees nothing about key overlap
     // with existing files, so readers must LWW-resolve (and compaction
     // may fold) — identical to the reference's insert method being
     // correct only "because date-gap logic makes it idempotent per-day"
     // (reference: engine/payload/united_way/211.py:286-293)
-    val newFiles = writeBuckets(table, deduped, 1, snap,
-      prePartitioned = useBucket,
+    val newFiles = writeBuckets(table,
+      LakeTable.lwwResolve(norm, snap.nBuckets), 1, snap,
+      prePartitioned = true,
       kind = if (replaceExisting) "base" else "delta")
     val rejected =
       if (newFiles.nonEmpty)
@@ -1223,7 +1027,7 @@ object MergeApply {
       kind: String = "base", targetBuckets: Int = -1,
       /** Apply the table's opt-in bloom indexing — set ONLY by
         * file-group-rewrite callers (misaligned rebucket); the per-epoch
-        * delta/COW paths leave it false to stay lean. */
+        * delta write leaves it false to stay lean. */
       bloom: Boolean = false): Seq[DataFileEntry] = {
     val spark = table.spark
     val outDir = s"${table.dir}/data/commit-${snap.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -1232,10 +1036,10 @@ object MergeApply {
     // re-merging salt cells and silently defeating the maxRowsPerFile
     // skew defense the caller computed `salt` for. The unsalted path
     // partitions by conv_id — pmod(murmur3(conv_id), nB) IS the bucket
-    // function, so partition i holds exactly bucket i (see mergeMor).
+    // function, so partition i holds exactly bucket i (see mergeAttempt).
     val nB = if (targetBuckets > 0) targetBuckets else snap.nBuckets
     val writeDf =
-      if (prePartitioned) df // bucket dedup already exchanged to (__bucket, __salt)
+      if (prePartitioned) df // caller already exchanged to bucket layout
       else if (salt <= 1) df.repartition(nB, col("conv_id"))
       else df.repartition(nB * salt, col("__bucket"),
         pmod(hash(col("turn_idx")), lit(salt)))
@@ -1271,24 +1075,15 @@ object MergeApply {
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .map(f => (f.getPath, bucket))
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, files.size)))
-    try {
-      files.map { case (p, bucket) =>
-        pool.submit(new java.util.concurrent.Callable[DataFileEntry] {
-          def call(): DataFileEntry = {
-            val s = parquetFooterStats(conf, p, tsCol)
-            // tsCol rides the entry even when the footer gave no ranges
-            // (INT96): it names the column any stats describe AND marks
-            // the file's era as covered by the snapshot's event-time
-            // high-water mark (see DataFileEntry.tsCol)
-            DataFileEntry(p.toString, bucket, s.rows, schemaVersion, kind,
-              s.minLsn, s.maxLsn, minTs = s.minTs, maxTs = s.maxTs,
-              tsCol = tsCol)
-          }
-        })
-      }.map(_.get())
-    } finally pool.shutdown()
+    LakeTable.parMap(files, LakeTable.FooterPoolWidth) { case (p, bucket) =>
+      val s = parquetFooterStats(conf, p, tsCol)
+      // tsCol rides the entry even when the footer gave no ranges (INT96):
+      // it names the column any stats describe AND marks the file's era
+      // as covered by the snapshot's event-time high-water mark (see
+      // DataFileEntry.tsCol)
+      DataFileEntry(p.toString, bucket, s.rows, schemaVersion, kind,
+        s.minLsn, s.maxLsn, minTs = s.minTs, maxTs = s.maxTs, tsCol = tsCol)
+    }
   }
 
   private final case class FooterStats(rows: Long, minLsn: Long,

@@ -300,10 +300,12 @@ object Purge {
         else {
           val payloadCols = df.columns.toSeq
             .filterNot(Set("conv_id", "turn_idx", "__lsn", "__op"))
+          // a file lacking `__op` reads it as null under mergeSchema: the
+          // coalesce counts such rows as payload, never as neither
           val keyOnly =
             if (!keyed || !df.columns.contains("__op")) lit(false)
-            else payloadCols.map(col(_).isNull)
-              .foldLeft(col("__op") === "D")(_ && _)
+            else coalesce(payloadCols.map(col(_).isNull)
+              .foldLeft(col("__op") === "D")(_ && _), lit(false))
           df.filter(col("conv_id").isInCollection(convIds))
             .groupBy(input_file_name().as("__file"))
             .agg(

@@ -941,28 +941,6 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     }
   }
 
-  /** LWW-resolve a raw frame that may hold several versions per key
-    * (merge-on-read deltas): keep the max-__lsn row per (conv_id,
-    * turn_idx). Shuffle shape: ONE exchange to
-    * `repartition(nBuckets, conv_id)` — the exact bucket function
-    * (pmod(murmur3(conv_id), nBuckets)), so shuffle partition i holds
-    * exactly bucket i with no balls-in-bins imbalance (hashing the
-    * bucket VALUE into nBuckets partitions leaves ~1/e of them empty) —
-    * then one sort + lag window clustered by conv_id, which the hash
-    * partitioning satisfies with NO further exchange. Partitions stay
-    * bucket-sized (never millions of tiny per-key exchanges), and a key
-    * group can never span its conv group. */
-  private def lwwResolve(raw: DataFrame, nBuckets: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lag
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("conv_id"))
-      .orderBy(col("turn_idx").asc, col("__lsn").desc)
-    raw.repartition(nBuckets, col("conv_id"))
-      .withColumn("__prev", lag(col("turn_idx"), 1).over(w))
-      .filter(col("__prev").isNull || col("__prev") =!= col("turn_idx"))
-      .drop("__prev")
-  }
-
   /** User-facing read: merge-on-read resolution restricted to the buckets
     * that actually hold delta files — base-only buckets stream straight
     * from the scan with NO exchange (one stray delta used to trigger a
@@ -1069,7 +1047,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * below the cut are filtered after resolution. A bucket whose single
     * candidate is a base file skips resolution (compaction leaves one
     * version per key); delta files may hold several versions of a key
-    * (MergeApply.mergeMor defers dedup to read), so delta candidates
+    * (MergeApply.merge defers dedup to read), so delta candidates
     * always resolve — an exchange over the NEW rows only. */
   def readSince(sinceLsn: Long, asOf: Option[Long] = None): DataFrame =
     readSinceSnap(sinceLsn, asOf.map(snapshotAt).getOrElse(snapshot))
@@ -1417,31 +1395,23 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       .foreach(f => problems += s"inverted event-time range: ${f.path}")
     if (snap.files.nonEmpty) {
       val conf = spark.sessionState.newHadoopConf()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, snap.files.size))
-      try {
-        problems ++= snap.files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[Option[String]] {
-            def call(): Option[String] = {
-              val p = new Path(f.path)
-              if (!p.getFileSystem(conf).exists(p))
-                Some(s"missing data file: ${f.path}")
-              else try {
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                  org.apache.parquet.hadoop.util.HadoopInputFile
-                    .fromPath(p, conf))
-                val rows = try r.getRecordCount finally r.close()
-                if (rows != f.rows) Some("row-count mismatch (manifest " +
-                  s"${f.rows}, footer $rows): ${f.path}")
-                else None
-              } catch {
-                case e if scala.util.control.NonFatal(e) =>
-                  Some(s"unreadable footer (${e.getMessage}): ${f.path}")
-              }
-            }
-          })
-        }.flatMap(_.get())
-      } finally pool.shutdown()
+      problems ++= parMap(snap.files, FooterPoolWidth) { f =>
+        val p = new Path(f.path)
+        if (!p.getFileSystem(conf).exists(p))
+          Some(s"missing data file: ${f.path}")
+        else try {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(p, conf))
+          val rows = try r.getRecordCount finally r.close()
+          if (rows != f.rows) Some("row-count mismatch (manifest " +
+            s"${f.rows}, footer $rows): ${f.path}")
+          else None
+        } catch {
+          case e if scala.util.control.NonFatal(e) =>
+            Some(s"unreadable footer (${e.getMessage}): ${f.path}")
+        }
+      }.flatten
     }
     snap.lineage.foreach { e =>
       val p = new Path(new Path(tablePath, "_lineage"),
@@ -2030,9 +2000,10 @@ object LakeTable {
   val TsHwmProp = "graft.stats.ts.highWater"
 
   /** Table property: comma-separated user columns to bloom-index in
-    * parquet at file-group-rewrite time (compaction / rebucket — NOT the
-    * per-epoch delta/COW writes, which stay lean; the Delta/Iceberg
-    * opt-in shape). Point lookups on a hash-distributed key
+    * parquet at file-group-rewrite time (compaction, rebucket, and the
+    * copy-on-write fold, which is a base rewrite — NOT the per-epoch
+    * delta write, which stays lean; the Delta/Iceberg opt-in shape).
+    * Point lookups on a hash-distributed key
     * ([[LakeTable.readConv]]) prune to one bucket from the manifest, but
     * min/max row-group stats are useless INSIDE the bucket (a hash key
     * spans the full string range in every file) — a bloom filter is the
@@ -2054,6 +2025,70 @@ object LakeTable {
     * across Spark versions within a deployment (documented contract). */
   def bucketExpr(nBuckets: Int) =
     pmod(hash(col("conv_id")), lit(nBuckets)).cast(IntegerType)
+
+  /** LWW-resolve a raw frame that may hold several versions per key
+    * (merge-on-read deltas, an append batch): keep the max-__lsn row per
+    * (conv_id, turn_idx). Shuffle shape: ONE exchange to
+    * `repartition(nBuckets, conv_id)` — the exact bucket function
+    * (pmod(murmur3(conv_id), nBuckets)), so shuffle partition i holds
+    * exactly bucket i with no balls-in-bins imbalance (hashing the
+    * bucket VALUE into nBuckets partitions leaves ~1/e of them empty) —
+    * then one sort + lag window clustered by conv_id, which the hash
+    * partitioning satisfies with NO further exchange. Partitions stay
+    * bucket-sized (never millions of tiny per-key exchanges), a key
+    * group can never span its conv group, and the output is already in
+    * bucket layout for a `partitionBy("__bucket")` write. */
+  private[graft] def lwwResolve(raw: DataFrame, nBuckets: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("conv_id"))
+      .orderBy(col("turn_idx").asc, col("__lsn").desc)
+    raw.repartition(nBuckets, col("conv_id"))
+      .withColumn("__prev", lag(col("turn_idx"), 1).over(w))
+      .filter(col("__prev").isNull || col("__prev") =!= col("turn_idx"))
+      .drop("__prev")
+  }
+
+  /** LWW-fold a bucket-sized raw frame to one row per (conv_id,
+    * turn_idx): `max_by(struct(*), __lsn)` under a key `groupBy` — a
+    * hash aggregate with map-side partial aggregation, so it skips the
+    * window sort entirely. Tombstones are kept: a tombstone may still
+    * out-LSN a late update from a not-yet-seen epoch. The one fold
+    * behind compaction, rebucket, the purge rewrite and copy-on-write. */
+  private[graft] def foldLww(raw: DataFrame): DataFrame =
+    raw.groupBy(col("conv_id"), col("turn_idx"))
+      .agg(max_by(struct(raw.columns.toSeq.map(col): _*), col("__lsn"))
+        .as("__r"))
+      .select(col("__r.*"))
+
+  /** Driver-pool width for per-bucket fold jobs (compaction, rebucket,
+    * copy-on-write): each job is one bucket's bounded fold, so a handful
+    * in flight keeps the local task slots fed. */
+  private[graft] val FoldPoolWidth = 8
+
+  /** Driver-pool width for parquet footer reads (commit registration,
+    * fsck) — metadata I/O, not Spark jobs. */
+  private[graft] val FooterPoolWidth = 16
+
+  /** `items.map(f)` on a bounded driver pool of at most `width` threads,
+    * results in input order. The first failure (in input order) is
+    * rethrown unwrapped; the pool shuts down in every case. */
+  private[graft] def parMap[A, B](items: Seq[A], width: Int)(f: A => B)
+      : Seq[B] =
+    if (items.isEmpty) Nil
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(math.max(1, width), items.size))
+      try items.toVector.map(a => pool.submit(
+          new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
+        .map { fut =>
+          try fut.get()
+          catch {
+            case e: java.util.concurrent.ExecutionException
+                if e.getCause != null => throw e.getCause
+          }
+        }
+      finally pool.shutdown()
+    }
 
   /** UTC epoch micros of an instant — THE timestamp-to-micros formula
     * (Instant normalizes nano into [0, 1e9), so pre-epoch values are

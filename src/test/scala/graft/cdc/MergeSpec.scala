@@ -83,24 +83,47 @@ class MergeSpec extends SparkSpec {
     assert(table.read().select("text").as[String].collect().toSeq == Seq("v40"))
   }
 
-  test("all write modes and dedup strategies agree with the oracle") {
+  test("every write path reproduces the oracle across two batches") {
     val small = cfg.copy(nEvents = 5000L)
     val log = ChangeLogGen.changeLogDF(spark, small)
-    val configs = Seq(
-      "mor" -> MergeConfig(writeMode = "mor"),
-      "cow-bucket" -> MergeConfig(writeMode = "cow", dedup = "bucket"),
-      "cow-window" -> MergeConfig(writeMode = "cow", dedup = "window"),
-      "cow-agg" -> MergeConfig(writeMode = "cow", dedup = "aggregate"))
-    val states = configs.map { case (name, mc) =>
-      val t = LakeTable.createTable(spark, tmpDir(s"lake-$name"),
-        Schemas.transcript, 4)
-      // two batches so every path also exercises cross-batch LWW
+    val oracle = ChangeLogGen.oracleFinalState(small)
+    def fresh(name: String) = LakeTable.createTable(spark,
+      tmpDir(s"lake-$name"), Schemas.transcript, 4)
+    // two batches so every merge path also exercises cross-batch LWW
+    def twoMerges(t: LakeTable, mc: MergeConfig): Unit = {
       MergeApply.merge(t, log.limit(3000), 0L, mc)
       MergeApply.merge(t, log, 1L, mc)
-      finalState(t)
     }
-    assert(states.distinct.size == 1)
-    assert(states.head == ChangeLogGen.oracleFinalState(small))
+
+    val mor = fresh("mor")
+    twoMerges(mor, MergeConfig(writeMode = "mor"))
+    assert(finalState(mor) == oracle)
+
+    val cow = fresh("cow")
+    twoMerges(cow, MergeConfig(writeMode = "cow"))
+    assert(finalState(cow) == oracle)
+    // the in-commit fold consumed its deltas: nothing is left for the
+    // orphan sweep, and every touched bucket holds only base files
+    assert(cow.vacuumOrphans(graceMs = 0L) == 0)
+    val touched = cow.lineage.flatMap(_.bucketsTouched).toSet
+    assert(touched.nonEmpty)
+    assert(cow.snapshot.files.filter(f => touched.contains(f.bucket))
+      .forall(_.kind == "base"))
+
+    val compacted = fresh("mor-compact")
+    twoMerges(compacted, MergeConfig(writeMode = "mor"))
+    MergeApply.compactBuckets(compacted,
+      compacted.snapshot.files.map(_.bucket).toSet)
+    assert(compacted.snapshot.files.forall(_.kind == "base"))
+    assert(finalState(compacted) == oracle)
+
+    // append is correct on fresh keys: split the log by conversation so
+    // the two batches share no key
+    val app = fresh("append")
+    val half = pmod(hash(col("conv_id")), lit(2)) === 0
+    MergeApply.append(app, log.filter(half), 0L)
+    MergeApply.append(app, log.filter(!half), 1L)
+    assert(finalState(app) == oracle)
   }
 
   test("bucket pruning: untouched buckets carry over by reference (cow)") {

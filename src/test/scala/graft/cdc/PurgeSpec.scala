@@ -366,6 +366,23 @@ class PurgeSpec extends SparkSpec {
       "live data files not attributed to snapshot versions")
   }
 
+  test("verifyErasure counts a file without __op as payload, not as nothing") {
+    val t = seeded("purge-verify-noop")
+    val victims = someConvs(t, 1)
+    Purge.purgeConversations(t, victims)
+    // a stray file under data/ (e.g. a hand-copied key export) whose
+    // schema lacks __op: under mergeSchema its __op and payload columns
+    // read as null, so the row is no tombstone — it must count as payload
+    val stray = s"${t.dir}/data/stray-0/__bucket=0"
+    Seq((victims.head, 0)).toDF("conv_id", "turn_idx")
+      .coalesce(1).write.parquet(stray)
+    val rep = Purge.verifyErasure(t, victims)
+    val hit = rep.residuals.filter(_.path.contains("stray-0"))
+    assert(hit.map(r => (r.payloadRows, r.keyOnlyRows)) == Seq((1L, 0L)),
+      s"stray file misreported: $hit")
+    assert(!rep.payloadClean)
+  }
+
   test("the purge delivers exactly its deletes through the change feed") {
     val t = seeded("purge-feed")
     val victims = someConvs(t, 1)

@@ -70,6 +70,20 @@ class BloomSpec extends SparkSpec {
     assert(t.readConv("K9").count() == 0)
   }
 
+  test("copy-on-write output is a base rewrite and carries the bloom") {
+    val t = LakeTable.createTable(spark, tmpDir("bloom-cow"),
+      Schemas.transcript, 2,
+      properties = Map(LakeTable.BloomColumnsProp -> "conv_id"))
+    val cow = MergeConfig(writeMode = "cow")
+    MergeApply.merge(t, batch((1, "I", "K1", 0), (2, "I", "K2", 0)), 0L, cow)
+    MergeApply.merge(t, batch((3, "U", "K1", 0), (4, "I", "K3", 0)), 1L, cow)
+    val files = t.snapshot.files
+    assert(files.nonEmpty && files.forall(_.kind == "base"))
+    files.foreach(f => assertBloomed(f.path, "conv_id"))
+    assert(t.readConv("K1").select("text").as[String].collect()
+      .toSeq == Seq("text-3"))
+  }
+
   test("without the property, rewrites stay bloom-free") {
     val t = LakeTable.createTable(spark, tmpDir("bloom-off"),
       Schemas.transcript, 2)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.cdc.{MergeApply, MergeConfig, MergeResult}
+import graft.gen.{ChangeLogGen, GenConfig}
 import graft.lake.LakeTable
-import graft.model.{ChangeEvent, Schemas}
+import graft.model.{ChangeEvent, Schemas, TranscriptRow}
 
 /** `format("graft-table")` — the lake table as a Structured Streaming
   * source. Exactly-once table-to-table replication across restarts,
@@ -407,6 +408,30 @@ class LakeTableSourceSpec extends SparkSpec {
     drain(srcDir, dst, ckpt)
     assert(state(dst) == state(src))
     assert(state(dst).exists(_._1 == "c2"), "late low-LSN arrival was lost")
+  }
+
+  test("a copy-on-write source mirrors to the oracle: its folds carry arrivals") {
+    import spark.implicits._
+    val c = GenConfig(nEvents = 4000L, nConvs = 60L, maxTurns = 10)
+    val srcDir = tmpDir("lts-cow")
+    val src = LakeTable.createTable(spark, srcDir, Schemas.transcript, 4)
+    val dst = LakeTable.createTable(spark, tmpDir("lts-cow-dst"),
+      Schemas.transcript, 4)
+    val ckpt = tmpDir("lts-cow-ckpt")
+    val parts = 4
+    (0 until parts).foreach { b =>
+      val slice = spark.range(b * c.nEvents / parts,
+          (b + 1) * c.nEvents / parts).as[Long]
+        .mapPartitions(_.map(s => ChangeLogGen.eventAt(c,
+          ChangeLogGen.deliveredLsn(c, s)))).toDF()
+      MergeApply.merge(src, slice, b.toLong, MergeConfig(writeMode = "cow"))
+      // drain after every commit, so each window starts exactly at the
+      // parent of a copy-on-write commit
+      drain(srcDir, dst, ckpt)
+    }
+    val got = dst.read().as[TranscriptRow].collect().toSeq
+      .sortBy(r => (r.conv_id, r.turn_idx))
+    assert(got == ChangeLogGen.oracleFinalState(c))
   }
 
   test("compaction between micro-batches re-delivers nothing") {
