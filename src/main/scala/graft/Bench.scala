@@ -1,4 +1,6 @@
 package graft
+import java.io.File
+
 import org.apache.spark.sql.SparkSession
 
 import graft.cdc.{CdcPipeline, PipelineConfig}
@@ -29,24 +31,25 @@ object Bench {
     * scaling — on a real cluster, storage and memory bandwidth scale with
     * node count, which a single local disk cannot represent. */
   private def benchTmp(prefix: String): String = {
-    val base = new java.io.File("/dev/shm")
+    val base = new File("/dev/shm")
     val dir = if (base.isDirectory && base.canWrite)
       java.nio.file.Files.createTempDirectory(base.toPath, prefix)
     else java.nio.file.Files.createTempDirectory(prefix)
     dir.toString
   }
 
-  /** Killed bench runs leave multi-GB scratch under /dev/shm; a
-    * graft-bench-* dir untouched for 30+ minutes cannot belong to a live
-    * run (live runs create per-replay subdirs every few minutes), so
-    * sweep it before this run competes with the corpse for tmpfs. */
-  private def sweepStaleScratch(): Unit = {
-    val base = new java.io.File("/dev/shm")
-    if (!base.isDirectory) return
-    val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-    Option(base.listFiles()).getOrElse(Array.empty)
+  /** Killed bench runs leave multi-GB scratch under `base` (/dev/shm); a
+    * graft-bench-* dir untouched for 30+ minutes before `nowMs` cannot
+    * belong to a live run (live runs create per-replay subdirs every few
+    * minutes), so sweep it before this run competes with the corpse for
+    * tmpfs. Untouched = the newest mtime of the dir and its immediate
+    * children (a replay writing inside its subdir leaves the dir's own). */
+  private[graft] def sweepStaleScratch(base: File, nowMs: Long): Unit = {
+    def children(d: File) = Option(d.listFiles()).getOrElse(Array.empty[File])
+    val cutoff = nowMs - 30L * 60 * 1000
+    children(base)
       .filter(f => f.isDirectory && f.getName.startsWith("graft-bench") &&
-        f.lastModified < cutoff)
+        (f +: children(f)).map(_.lastModified).max < cutoff)
       .foreach { f =>
         System.err.println(s"[bench] sweeping stale scratch ${f.getPath}")
         org.apache.commons.io.FileUtils.deleteQuietly(f): Unit
@@ -78,12 +81,14 @@ object Bench {
   }
 
   private val FilesPerBatch = 8
+  /** Hot-conversation share of the uniform feed (the skew section raises it). */
+  private val UniformHot = 0.05
 
   /** Generate the seeded feed once; every measured run — at either
     * parallelism level — replays the SAME bytes. `hot` is the share of
     * events aimed at one conversation (the generator's hot-key knob). */
   private def genFeed(work: String, events: Long, batches: Int,
-      hot: Double = 0.05): String = {
+      hot: Double): String = {
     val spark = session(32, s"$work/gen-local")
     try {
       val cfg = GenConfig(nEvents = events,
@@ -125,11 +130,169 @@ object Bench {
       val applied = events / ((tApplied - t0) / 1e9)
       val fin = events / ((System.nanoTime() - t0) / 1e9)
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$work/table-$cores-$run"))
+        new File(s"$work/table-$cores-$run"))
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$work/ckpt-$cores-$run"))
+        new File(s"$work/ckpt-$cores-$run"))
       (applied, fin)
     } finally spark.stop()
+  }
+
+  /** The `cdc` (+ `cdc_skewed`) section of the bench JSON, run in
+    * scratch dir `work`. The feed generator `(dir, events, batches, hot)`
+    * and the replay `(cores, events, feed, work, runId)` are passed in so
+    * a spec can drive the protocol with synthetic rates. */
+  private[graft] def cdcSection(work: String, cdcEvents: Long,
+      env: Map[String, String],
+      genFeed: (String, Long, Int, Double) => String,
+      replayRate: (Int, Long, String, String, Int) => (Double, Double))
+      : String = {
+    // 8 epochs of 4M: matches the MoR compaction cadence — the
+    // maxDeltaFilesPerBucket=8 threshold folds a bucket every ~8
+    // epochs, so charging ONE full fold against 8 epochs of input is
+    // the steady-state amortization (2 epochs would double-charge it).
+    // The ~0.8 s/epoch driver constant (micro-batch planning +
+    // offset/commit logs + snapshot commit) stays <5% at the 4N level.
+    val batches = 8
+    val reps = env.getOrElse("SPARK_GRAFT_CDC_REPS", "3").toInt
+    // N vs 4N cores; override e.g. SPARK_GRAFT_CDC_PAIR=2,8. Default is
+    // the box's compute-bound regime (see BASELINE.md: the per-core
+    // engine rate now saturates the VM's shared DRAM bus beyond ~4-8
+    // threads, which a real cluster scales with node count — the
+    // bandwidth ceiling itself is evidenced by the separate peak run).
+    val pair = env.getOrElse("SPARK_GRAFT_CDC_PAIR", "1,4").split(",")
+    val (n1, n4) = (pair(0).trim.toInt, pair(1).trim.toInt)
+    // absolute-throughput headline: cores at the measured VM optimum
+    val peakCores = env.getOrElse("SPARK_GRAFT_CDC_PEAK", "8").toInt
+    val feed = genFeed(work, cdcEvents, batches, UniformHot)
+    // even sizes average the middle two — taking the upper-middle
+    // element would bias every published median (and the efficiency
+    // ratios built from them) upward under an even rep count
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2)
+      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    }
+    // PHASE GUARD. This box has ±20-50% host-load phases lasting tens
+    // of minutes (BASELINE.md); a phase landing on one level corrupts
+    // the efficiency RATIO in either direction. A fixed calibration
+    // replay (~1/8 of the feed at the 4N level) runs immediately
+    // before EVERY measured replay; a measured run whose calibration
+    // sits more than `driftTol` off the session's calibration median
+    // was taken in a different phase and is excluded from the
+    // efficiency estimate (each level gets one redo first). The full
+    // calibration series, exclusions, and redos are disclosed — a
+    // degraded session is self-describing instead of silently wrong.
+    val calEvents = math.max(1L, cdcEvents / 8)
+    val calFeed = genFeed(s"$work/cal", calEvents, 1, UniformHot)
+    val driftTol =
+      env.getOrElse("SPARK_GRAFT_CAL_DRIFT", "0.15").toDouble
+    val calSeries = collection.mutable.Buffer[Double]()
+    var calId = 0
+    def calibrate(): Double = {
+      calId += 1
+      val r = replayRate(n4, calEvents, calFeed, s"$work/cal", calId)._2
+      calSeries += r; r
+    }
+    // JIT warmup on the calibration slice (full code path): warms
+    // parquet codecs, shuffle, codegen and the streaming machinery
+    // without paying a full discarded replay. NOT a cal sample — the
+    // first replay in a JVM is compilation-bound, not phase-bound.
+    replayRate(n4, calEvents, calFeed, s"$work/warm", 0)
+    // peak sustained throughput at the VM's bandwidth optimum — the
+    // absolute events/sec headline, measured FIRST: hours-old JVMs
+    // degrade ~20-30% (heap/metaspace churn from many sessions), and
+    // the peak should reflect a healthy executor, not a tired one
+    val peaks = (1 to 2).map(i =>
+      replayRate(peakCores, cdcEvents, feed, work, 100 + i))
+    val peakApplied = peaks.map(_._1).max
+    val peakFinal = peaks.map(_._2).max
+    // one measured replay, tagged with its adjacent calibration
+    case class M(eps: Double, applied: Double, cal: Double)
+    def measure(cores: Int, runId: Int, f: String = feed,
+        ev: Long = cdcEvents): M = {
+      val c = calibrate()
+      val (a, fin) = replayRate(cores, ev, f, work, runId)
+      M(fin, a, c)
+    }
+    // interleave levels so slow machine phases hit both equally.
+    // Scaling is computed on the FINAL (compaction-inclusive) rate —
+    // the conservative number; the deferred-resolution apply rate is
+    // disclosed alongside.
+    val m1 = collection.mutable.Buffer[M]()
+    val m4 = collection.mutable.Buffer[M]()
+    (1 to reps).foreach { i =>
+      m1 += measure(n1, i)
+      m4 += measure(n4, i)
+    }
+    def inPhase(m: M): Boolean =
+      math.abs(m.cal / median(calSeries.toSeq) - 1.0) <= driftTol
+    // redo a level only when drift leaves it with fewer than TWO
+    // in-phase runs — the estimator is already robust on two, and an
+    // unconditional redo spends ~7 min of a driver-budgeted session
+    // chasing a phase that may not have ended (r5 session 1's redo
+    // landed in the same trough it was escaping)
+    var redos = 0
+    if (m1.count(inPhase) < 2 && redos < 2) {
+      redos += 1; m1 += measure(n1, 10 + redos)
+    }
+    if (m4.count(inPhase) < 2 && redos < 2) {
+      redos += 1; m4 += measure(n4, 20 + redos)
+    }
+    val acc1 = m1.filter(inPhase)
+    val acc4 = m4.filter(inPhase)
+    // a session degraded end-to-end has no in-phase subset to prefer;
+    // fall back to all runs and say so
+    val (u1, u4) =
+      if (acc1.nonEmpty && acc4.nonEmpty) (acc1.toSeq, acc4.toSeq)
+      else (m1.toSeq, m4.toSeq)
+    val calSpread =
+      if (calSeries.isEmpty) 0.0
+      else (calSeries.max - calSeries.min) / median(calSeries.toSeq)
+    val phaseDrift = u1.size < m1.size || u4.size < m4.size ||
+      acc1.isEmpty || acc4.isEmpty || calSpread > driftTol
+    // efficiency is a RATIO of two noisy measurements (±15-20% on
+    // this shared-host VM; raw runs disclosed below). The primary
+    // estimator is the Hodges-Lehmann-style MEDIAN OVER ALL
+    // CROSS-PAIR RATIOS {r4_j / (4·r1_i)} over the IN-PHASE runs —
+    // the textbook robust ratio estimator: it neither assumes phases
+    // are longer than a pair (which the within-pair ratio does) nor
+    // mixes phases the way a ratio of per-level medians does.
+    // Within-pair ratios, the unpaired ratio-of-medians, best-of,
+    // and every raw run (redos included) are disclosed.
+    val r1 = u1.map(_.eps)
+    val r4 = u4.map(_.eps)
+    val allRatios = for { a <- r1; b <- r4 } yield b / (4.0 * a)
+    val effHl = median(allRatios)
+    val paired = r1.zip(r4).map { case (a, b) => b / (4.0 * a) }
+    val effPaired = median(paired)
+    val effUnpaired = median(r4) / (4.0 * median(r1))
+    val effBest = r4.max / (4.0 * r1.max)
+    val mainCals = calSeries.toSeq // the guard's series; skew appends more
+    // skew evidence: the same protocol over a feed with ONE hot
+    // conversation taking `skewHot` of all events (the north rule's
+    // hot-conv_id case; the uniform feed already carries 5%) —
+    // deterministic salting should hold efficiency within ~0.1 of
+    // the uniform number. Fewer reps (disclosed): the skew DELTA is
+    // the signal, and the uniform section already bounds phase noise.
+    val skewReps =
+      env.getOrElse("SPARK_GRAFT_CDC_SKEW_REPS", "1").toInt
+    val skewHot = 0.10
+    val skewJson = if (skewReps > 0) {
+      val skewEvents = env.getOrElse("SPARK_GRAFT_CDC_SKEW_EVENTS",
+        (cdcEvents / 2).toString).toLong
+      val sFeed = genFeed(s"$work/skew", skewEvents, batches, skewHot)
+      val s1 = collection.mutable.Buffer[M]()
+      val s4 = collection.mutable.Buffer[M]()
+      (1 to skewReps).foreach { i =>
+        s1 += measure(n1, 30 + i, sFeed, skewEvents)
+        s4 += measure(n4, 40 + i, sFeed, skewEvents)
+      }
+      val sRatios =
+        for { a <- s1.toSeq; b <- s4.toSeq } yield b.eps / (4.0 * a.eps)
+      val sEff = median(sRatios)
+      f""","cdc_skewed":{"events":$skewEvents,"hot_fraction":$skewHot%.2f,"reps":$skewReps,"eps_n_median":${median(s1.toSeq.map(_.eps))}%.1f,"eps_4n_median":${median(s4.toSeq.map(_.eps))}%.1f,"scaling_efficiency":$sEff%.3f,"runs_n":[${s1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${s4.map(v => f"${v.eps}%.1f").mkString(",")}],"cal_n":[${s1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${s4.map(v => f"${v.cal}%.1f").mkString(",")}]}"""
+    } else ""
+    f""","cdc":{"events":$cdcEvents,"batches":$batches,"cores_n":$n1,"cores_4n":$n4,"eps_n_median":${median(r1)}%.1f,"eps_4n_median":${median(r4)}%.1f,"scaling_efficiency":$effHl%.3f,"scaling_efficiency_paired":$effPaired%.3f,"scaling_efficiency_unpaired":$effUnpaired%.3f,"eps_n_best":${r1.max}%.1f,"eps_4n_best":${r4.max}%.1f,"scaling_efficiency_best_of":$effBest%.3f,"paired_ratios":[${paired.map(v => f"$v%.3f").mkString(",")}],"runs_n":[${m1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${m4.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_n_applied":[${m1.map(v => f"${v.applied}%.1f").mkString(",")}],"runs_4n_applied":[${m4.map(v => f"${v.applied}%.1f").mkString(",")}],"cal_events":$calEvents,"cal_runs":[${mainCals.map(v => f"$v%.1f").mkString(",")}],"cal_n":[${m1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${m4.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_spread":$calSpread%.3f,"cal_drift_tol":$driftTol%.2f,"phase_drift":$phaseDrift,"redo_runs":$redos,"used_n":${u1.size},"used_4n":${u4.size},"cores_peak":$peakCores,"eps_peak":$peakFinal%.1f,"eps_peak_applied":$peakApplied%.1f}$skewJson"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -137,7 +300,7 @@ object Bench {
     // interpolations, which format in the JVM default locale — a comma-
     // decimal locale would emit 0,893 and break the driver's json.load
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    sweepStaleScratch()
+    sweepStaleScratch(new File("/dev/shm"), System.currentTimeMillis())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt
@@ -154,156 +317,10 @@ object Bench {
     // ±15%, so each level runs `reps` times interleaved and reports
     // medians; a warmup replay absorbs JIT compilation.
     val cdcJson = if (cdcEvents > 0) {
-      // 8 epochs of 4M: matches the MoR compaction cadence — the
-      // maxDeltaFilesPerBucket=8 threshold folds a bucket every ~8
-      // epochs, so charging ONE full fold against 8 epochs of input is
-      // the steady-state amortization (2 epochs would double-charge it).
-      // The ~0.8 s/epoch driver constant (micro-batch planning +
-      // offset/commit logs + snapshot commit) stays <5% at the 4N level.
-      val batches = 8
-      val reps = sys.env.getOrElse("SPARK_GRAFT_CDC_REPS", "3").toInt
-      // N vs 4N cores; override e.g. SPARK_GRAFT_CDC_PAIR=2,8. Default is
-      // the box's compute-bound regime (see BASELINE.md: the per-core
-      // engine rate now saturates the VM's shared DRAM bus beyond ~4-8
-      // threads, which a real cluster scales with node count — the
-      // bandwidth ceiling itself is evidenced by the separate peak run).
-      val pair = sys.env.getOrElse("SPARK_GRAFT_CDC_PAIR", "1,4").split(",")
-      val (n1, n4) = (pair(0).trim.toInt, pair(1).trim.toInt)
-      // absolute-throughput headline: cores at the measured VM optimum
-      val peakCores = sys.env.getOrElse("SPARK_GRAFT_CDC_PEAK", "8").toInt
       val work = benchTmp("graft-bench-cdc")
-      try {
-        val feed = genFeed(work, cdcEvents, batches)
-        // even sizes average the middle two — taking the upper-middle
-        // element would bias every published median (and the efficiency
-        // ratios built from them) upward under an even rep count
-        def median(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
-        // PHASE GUARD. This box has ±20-50% host-load phases lasting tens
-        // of minutes (BASELINE.md); a phase landing on one level corrupts
-        // the efficiency RATIO in either direction. A fixed calibration
-        // replay (~1/8 of the feed at the 4N level) runs immediately
-        // before EVERY measured replay; a measured run whose calibration
-        // sits more than `driftTol` off the session's calibration median
-        // was taken in a different phase and is excluded from the
-        // efficiency estimate (each level gets one redo first). The full
-        // calibration series, exclusions, and redos are disclosed — a
-        // degraded session is self-describing instead of silently wrong.
-        val calEvents = math.max(1L, cdcEvents / 8)
-        val calFeed = genFeed(s"$work/cal", calEvents, 1)
-        val driftTol =
-          sys.env.getOrElse("SPARK_GRAFT_CAL_DRIFT", "0.15").toDouble
-        val calSeries = collection.mutable.Buffer[Double]()
-        var calId = 0
-        def calibrate(): Double = {
-          calId += 1
-          val r = replayRate(n4, calEvents, calFeed, s"$work/cal", calId)._2
-          calSeries += r; r
-        }
-        // JIT warmup on the calibration slice (full code path): warms
-        // parquet codecs, shuffle, codegen and the streaming machinery
-        // without paying a full discarded replay. NOT a cal sample — the
-        // first replay in a JVM is compilation-bound, not phase-bound.
-        replayRate(n4, calEvents, calFeed, s"$work/warm", 0)
-        // peak sustained throughput at the VM's bandwidth optimum — the
-        // absolute events/sec headline, measured FIRST: hours-old JVMs
-        // degrade ~20-30% (heap/metaspace churn from many sessions), and
-        // the peak should reflect a healthy executor, not a tired one
-        val peaks = (1 to 2).map(i =>
-          replayRate(peakCores, cdcEvents, feed, work, 100 + i))
-        val peakApplied = peaks.map(_._1).max
-        val peakFinal = peaks.map(_._2).max
-        // one measured replay, tagged with its adjacent calibration
-        case class M(eps: Double, applied: Double, cal: Double)
-        def measure(cores: Int, runId: Int, f: String = feed,
-            ev: Long = cdcEvents): M = {
-          val c = calibrate()
-          val (a, fin) = replayRate(cores, ev, f, work, runId)
-          M(fin, a, c)
-        }
-        // interleave levels so slow machine phases hit both equally.
-        // Scaling is computed on the FINAL (compaction-inclusive) rate —
-        // the conservative number; the deferred-resolution apply rate is
-        // disclosed alongside.
-        val m1 = collection.mutable.Buffer[M]()
-        val m4 = collection.mutable.Buffer[M]()
-        (1 to reps).foreach { i =>
-          m1 += measure(n1, i)
-          m4 += measure(n4, i)
-        }
-        def inPhase(m: M): Boolean =
-          math.abs(m.cal / median(calSeries.toSeq) - 1.0) <= driftTol
-        // redo a level only when drift leaves it with fewer than TWO
-        // in-phase runs — the estimator is already robust on two, and an
-        // unconditional redo spends ~7 min of a driver-budgeted session
-        // chasing a phase that may not have ended (r5 session 1's redo
-        // landed in the same trough it was escaping)
-        var redos = 0
-        if (m1.count(inPhase) < 2 && redos < 2) {
-          redos += 1; m1 += measure(n1, 10 + redos)
-        }
-        if (m4.count(inPhase) < 2 && redos < 2) {
-          redos += 1; m4 += measure(n4, 20 + redos)
-        }
-        val acc1 = m1.filter(inPhase)
-        val acc4 = m4.filter(inPhase)
-        // a session degraded end-to-end has no in-phase subset to prefer;
-        // fall back to all runs and say so
-        val (u1, u4) =
-          if (acc1.nonEmpty && acc4.nonEmpty) (acc1.toSeq, acc4.toSeq)
-          else (m1.toSeq, m4.toSeq)
-        val calSpread =
-          if (calSeries.isEmpty) 0.0
-          else (calSeries.max - calSeries.min) / median(calSeries.toSeq)
-        val phaseDrift = u1.size < m1.size || u4.size < m4.size ||
-          acc1.isEmpty || acc4.isEmpty || calSpread > driftTol
-        // efficiency is a RATIO of two noisy measurements (±15-20% on
-        // this shared-host VM; raw runs disclosed below). The primary
-        // estimator is the Hodges-Lehmann-style MEDIAN OVER ALL
-        // CROSS-PAIR RATIOS {r4_j / (4·r1_i)} over the IN-PHASE runs —
-        // the textbook robust ratio estimator: it neither assumes phases
-        // are longer than a pair (which the within-pair ratio does) nor
-        // mixes phases the way a ratio of per-level medians does.
-        // Within-pair ratios, the unpaired ratio-of-medians, best-of,
-        // and every raw run (redos included) are disclosed.
-        val r1 = u1.map(_.eps)
-        val r4 = u4.map(_.eps)
-        val allRatios = for { a <- r1; b <- r4 } yield b / (4.0 * a)
-        val effHl = median(allRatios)
-        val paired = r1.zip(r4).map { case (a, b) => b / (4.0 * a) }
-        val effPaired = median(paired)
-        val effUnpaired = median(r4) / (4.0 * median(r1))
-        val effBest = r4.max / (4.0 * r1.max)
-        // skew evidence: the same protocol over a feed with ONE hot
-        // conversation taking `skewHot` of all events (the north rule's
-        // hot-conv_id case; the uniform feed already carries 5%) —
-        // deterministic salting should hold efficiency within ~0.1 of
-        // the uniform number. Fewer reps (disclosed): the skew DELTA is
-        // the signal, and the uniform section already bounds phase noise.
-        val skewReps =
-          sys.env.getOrElse("SPARK_GRAFT_CDC_SKEW_REPS", "1").toInt
-        val skewHot = 0.10
-        val skewJson = if (skewReps > 0) {
-          val skewEvents = sys.env.getOrElse("SPARK_GRAFT_CDC_SKEW_EVENTS",
-            (cdcEvents / 2).toString).toLong
-          val sFeed = genFeed(s"$work/skew", skewEvents, batches, skewHot)
-          val s1 = collection.mutable.Buffer[M]()
-          val s4 = collection.mutable.Buffer[M]()
-          (1 to skewReps).foreach { i =>
-            s1 += measure(n1, 30 + i, sFeed, skewEvents)
-            s4 += measure(n4, 40 + i, sFeed, skewEvents)
-          }
-          val sRatios =
-            for { a <- s1.toSeq; b <- s4.toSeq } yield b.eps / (4.0 * a.eps)
-          val sEff = median(sRatios)
-          f""","cdc_skewed":{"events":$skewEvents,"hot_fraction":$skewHot%.2f,"reps":$skewReps,"eps_n_median":${median(s1.toSeq.map(_.eps))}%.1f,"eps_4n_median":${median(s4.toSeq.map(_.eps))}%.1f,"scaling_efficiency":$sEff%.3f,"runs_n":[${s1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${s4.map(v => f"${v.eps}%.1f").mkString(",")}],"cal_n":[${s1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${s4.map(v => f"${v.cal}%.1f").mkString(",")}]}"""
-        } else ""
-        f""","cdc":{"events":$cdcEvents,"batches":$batches,"cores_n":$n1,"cores_4n":$n4,"eps_n_median":${median(r1)}%.1f,"eps_4n_median":${median(r4)}%.1f,"scaling_efficiency":$effHl%.3f,"scaling_efficiency_paired":$effPaired%.3f,"scaling_efficiency_unpaired":$effUnpaired%.3f,"eps_n_best":${r1.max}%.1f,"eps_4n_best":${r4.max}%.1f,"scaling_efficiency_best_of":$effBest%.3f,"paired_ratios":[${paired.map(v => f"$v%.3f").mkString(",")}],"runs_n":[${m1.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_4n":[${m4.map(v => f"${v.eps}%.1f").mkString(",")}],"runs_n_applied":[${m1.map(v => f"${v.applied}%.1f").mkString(",")}],"runs_4n_applied":[${m4.map(v => f"${v.applied}%.1f").mkString(",")}],"cal_events":$calEvents,"cal_runs":[${calSeries.map(v => f"$v%.1f").mkString(",")}],"cal_n":[${m1.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_4n":[${m4.map(v => f"${v.cal}%.1f").mkString(",")}],"cal_spread":$calSpread%.3f,"cal_drift_tol":$driftTol%.2f,"phase_drift":$phaseDrift,"redo_runs":$redos,"used_n":${u1.size},"used_4n":${u4.size},"cores_peak":$peakCores,"eps_peak":$peakFinal%.1f,"eps_peak_applied":$peakApplied%.1f}$skewJson"""
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(work))
+      try cdcSection(work, cdcEvents, sys.env, genFeed, replayRate)
+      finally org.apache.commons.io.FileUtils.deleteQuietly(
+        new File(work))
     } else ""
 
     // query micro-bench AFTER the cdc section: the 32-thread query sweep
@@ -339,7 +356,7 @@ object Bench {
       name -> (if (failed) -1.0 else times.min)
     }
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(qLocal))
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(qLocal))
 
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -210,97 +210,41 @@ object CdcPipeline {
     try q.awaitTermination() finally if (q.isActive) q.stop()
   }
 
-  /** Outcome of one [[followOnce]] round. `toVersion` is the destination's
-    * new consumed-source-VERSION watermark when applied (unchanged
-    * otherwise). */
-  final case class FollowResult(applied: Boolean, fromVersion: Long,
-      toVersion: Long, merge: Option[MergeResult])
-
-  /** One round of table-to-table incremental sync — the downstream-
-    * consumption half of CDC, chaining lake tables into multi-hop
-    * (bronze → silver) pipelines. This is the LSN-exact form of the
-    * reference's time-gap incremental pull: query the DESTINATION for how
-    * far it has consumed, fetch only the gap from the source (reference:
-    * engine/time_field_util.py:53-127, engine/payload/united_way/211.py:225-248
-    * — `max(time_field)` of the destination bounds the next fetch).
+  /** Table-to-table incremental sync (bronze → silver chaining), the
+    * exactly-once form of the reference's time-gap incremental pull
+    * (reference: engine/time_field_util.py:53-127): ONE
+    * `Trigger.AvailableNow` drain of the `graft-table` source on `src`
+    * through `transform` into the `graft-table` sink on `dst`. The
+    * checkpoint's offset log is the consumed watermark, and as a WRITER
+    * option it scopes the sink's batch ids to its own txn slot — a re-run
+    * is a no-op and `dst` may take other writers. Returns `dst`'s version.
     *
-    * Mechanics: the destination's committed-epoch guard doubles as the
-    * consumed-source-VERSION watermark — each round merges the source's
-    * window ARRIVALS (`src.arrivalsSince(last)`, pinned to one source
-    * snapshot) under `epochId = src.snapshot.version`, so a crashed or
-    * re-run round is a no-op and a fresh destination starts from -1
-    * (full copy). The commit-version cut makes rounds robust to
-    * arbitrarily out-of-order LSN arrival at the source — an LSN-cut
-    * round silently loses a key whose winning event lands below the
-    * already-consumed high water (which is why epoch ids are snapshot
-    * versions, NOT source LSNs). O(new data) per round: exact arrival
-    * files are pruned from the manifest alone; a compaction fold inside
-    * the window degrades to re-upserting that bucket's winners, which
-    * the destination's LWW merge absorbs (tombstone winners ride along
-    * as `op="D"`, so deletes still propagate). Don't mix `followOnce`
-    * with feed ingest on one destination table.
-    *
-    * `transform` runs over the change envelope (`lsn`, `op`, user columns)
-    * and must keep `lsn`/`op`/key columns; use it for declarative
-    * silver-layer cleanup (projection, scalar fixes). Row-filtering
-    * transforms drop those keys' changes entirely — including their
-    * deletes — so filter on IMMUTABLE key attributes only.
-    *
-    * With `evolveSchema` (default), source schema evolution propagates:
-    * columns the source added (with their column docs — the reference's
-    * data-dictionary preservation, reference: engine/etl_util.py:87-115)
-    * are added downstream, and type widenings are widened downstream,
-    * BEFORE the round's merge — otherwise the destination's align would
-    * silently drop the new columns. Disable it when `transform` reshapes
-    * the columns and the destination schema is authored by hand. */
-  def followOnce(src: LakeTable, dst: LakeTable,
+    * `transform` must keep `lsn`/`op`/key columns; a row filter also drops
+    * its keys' deletes, so filter on immutable key attributes only.
+    * `evolveSchema` first adds the source's new columns (with their docs,
+    * reference: engine/etl_util.py:87-115) and widenings to `dst`, which
+    * the sink's align would otherwise drop; disable it when `transform`
+    * reshapes the columns of a hand-authored destination. */
+  def follow(src: LakeTable, dst: LakeTable, checkpointDir: String,
       transform: DataFrame => DataFrame = identity,
-      cfg: MergeConfig = MergeConfig(),
-      evolveSchema: Boolean = true): FollowResult = {
-    // the consumed-source-VERSION watermark IS the destination's global
-    // epoch space (epoch ids are source snapshot versions — see the
-    // scaladoc above for why not LSN cuts). A txn-scoped config would commit
-    // into the txn slot instead: the watermark never advances, every
-    // round re-reads from -1 and re-plans an O(table) merge before the
-    // txn guard no-ops it — correct final state, quadratic work. Fail
-    // loudly rather than silently degrade the documented O(new data).
-    require(cfg.txnApp.isEmpty,
-      "followOnce tracks progress in the table's global epoch space; " +
-        "txn-scoped MergeConfig (txnApp) would silently make each round O(table)")
-    val dstSnap = dst.snapshot
-    // migration guard: a mirror synced under the legacy LSN epoch space
-    // has a huge watermark — every version-space round would silently
-    // no-op under it. Fail loudly; only a fresh mirror adopts this space.
-    val space = dstSnap.properties.get(FollowSpaceProp)
-    if (!space.contains("version")) {
-      if (dstSnap.maxCommittedEpoch >= 0 || dstSnap.txns.nonEmpty)
-        sys.error(s"destination ${dst.dir} has committed epochs outside " +
-          "the consumed-source-version space (a legacy LSN-space or " +
-          "stream-fed mirror) — rebuild it before following")
-      dst.setProperty(FollowSpaceProp, "version")
-    }
-    val snap = src.snapshot
-    val last = dst.snapshot.maxCommittedEpoch
-    if (snap.version <= last)
-      return FollowResult(applied = false, last, last, None)
-    if (evolveSchema) propagateSchema(snap, dst)
-    val changes = src.arrivalsSince(last, asOf = Some(snap.version))
-      .withColumnRenamed("__lsn", "lsn")
-      .withColumnRenamed("__op", "op")
-    val res = MergeApply.merge(dst, transform(changes), snap.version, cfg)
-    FollowResult(res.applied, last,
-      if (res.applied) snap.version else last, Some(res))
+      evolveSchema: Boolean = true): Long = {
+    if (evolveSchema) propagateSchema(src.snapshot, dst)
+    val changes = src.spark.readStream.format("graft-table")
+      .option("path", src.dir).load()
+    val q = transform(changes).writeStream.format("graft-table")
+      .option("path", dst.dir)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+    dst.snapshot.version
   }
-
-  /** Table property recording that a destination's epoch watermark lives
-    * in the consumed-source-version space (followOnce's contract). */
-  val FollowSpaceProp = "graft.follow.space"
 
   /** Evolve `dst` to cover the source snapshot's user schema: add missing
     * columns (carrying the source's column docs) and widen narrower types.
     * Destination-only columns are left alone. Idempotent — both ops
     * no-change-skip via schema equality, so a crash between evolution and
-    * merge just redoes a no-op. */
+    * the drain just redoes a no-op. */
   private def propagateSchema(srcSnap: graft.lake.Snapshot,
       dst: LakeTable): Unit = {
     val want = srcSnap.userSchema
@@ -315,24 +259,5 @@ object CdcPipeline {
           dst.widenColumn(f.name, f.dataType)
       }
     }
-  }
-
-  /** Drain: follow rounds until the destination has consumed everything
-    * currently in the source. Returns the rounds that applied data.
-    * `evolveSchema` passes through to every [[followOnce]] round — the
-    * drain loop must honor the same opt-out (hand-authored destination
-    * schema under a reshaping `transform`) or the first round would
-    * pollute it with every source column. */
-  def followAvailable(src: LakeTable, dst: LakeTable,
-      transform: DataFrame => DataFrame = identity,
-      cfg: MergeConfig = MergeConfig(),
-      evolveSchema: Boolean = true): Seq[FollowResult] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[FollowResult]
-    var r = followOnce(src, dst, transform, cfg, evolveSchema)
-    while (r.applied) {
-      out += r
-      r = followOnce(src, dst, transform, cfg, evolveSchema)
-    }
-    out.toSeq
   }
 }

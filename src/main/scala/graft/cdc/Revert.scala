@@ -11,8 +11,8 @@ import graft.lake.LakeTable
   *
   * Why not an Iceberg-style metadata rollback (repoint CURRENT at the old
   * manifest list)? A rollback is O(1), but it rewinds state WITHOUT
-  * producing change events: every incremental consumer — `followOnce`
-  * mirrors, the `graft-table` streaming source, `changeFeed` windows —
+  * producing change events: every incremental consumer — `follow`
+  * mirrors and other `graft-table` streams, `changeFeed` windows —
   * sees the version counter advance while the un-done rows never appear
   * in any arrival window, so downstream tables silently diverge and must
   * be re-bootstrapped. A CDC engine's contract is that STATE IS THE FOLD
@@ -47,8 +47,9 @@ import graft.lake.LakeTable
   * is that the upstream tail is already past the table's high water (true
   * of any in-order WAL/binlog); an upstream event arriving LATER with
   * `lsn <= highWater + 1` for a compensated key would lose to the
-  * compensation — the same precondition [[LakeTable.changesBetween]]
-  * documents for LSN cuts.
+  * compensation. The precondition is that per-key arrival order respects
+  * LSN order: no key's winning event arrives after the revert carrying an
+  * LSN at or below the compensation's.
   *
   * Schema is NOT reverted (Iceberg rollback keeps table schema too):
   * preimages are projected onto the CURRENT schema — columns added since

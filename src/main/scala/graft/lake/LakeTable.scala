@@ -187,8 +187,8 @@ final case class LineageEntry(
   * so auditors can read the staged state ([[LakeTable.readStaged]]) while
   * every other reader and incremental consumer still sees the table
   * without it; [[LakeTable.abortStaged]] discards it. Because the intent
-  * sits outside the chain, version-window consumers (change feed, follow,
-  * the streaming source) observe a published intent as ONE ordinary
+  * sits outside the chain, version-window consumers (change feed,
+  * AggView, the streaming source) observe a published intent as ONE ordinary
   * commit — no special cases downstream. */
 final case class StagedIntent(
     wapId: String,
@@ -287,9 +287,9 @@ final case class Snapshot(
     DataType.fromJson(schemas(v.toString)).asInstanceOf[StructType]
   def isCommitted(epochId: Long): Boolean =
     epochId <= epochWatermark || recentEpochs.contains(epochId.toString)
-  /** Highest committed epoch id (-1 on a fresh table). For a destination
-    * fed exclusively by [[graft.cdc.CdcPipeline.followOnce]] — whose epoch
-    * ids are source LSN cuts — this is the consumed-LSN high-watermark. */
+  /** Highest committed epoch id in the table's global epoch space (-1 on
+    * a fresh table). Writers scoped to a txn slot ([[txns]]: the
+    * `graft-table` sink, revert) never move it. */
   def maxCommittedEpoch: Long =
     recentEpochs.keysIterator.foldLeft(epochWatermark)((a, k) =>
       math.max(a, k.toLong))
@@ -1035,9 +1035,10 @@ class LakeTable(val spark: SparkSession, val dir: String) {
   /** Incremental changes read — the downstream-consumption half of
     * lineage: every key whose WINNING (max-`__lsn`) version carries
     * `__lsn > sinceLsn`, emitted with `__lsn` and `__op` retained
-    * (tombstones included, so deletes propagate to the consumer). A
-    * poller chains calls with the `maxLsn` of the previous round's
-    * lineage entry, mirroring Iceberg's incremental read.
+    * (tombstones included, so deletes propagate to the consumer). Do not
+    * poll by chaining LSN cuts — a winner arriving later BELOW the consumed
+    * cut is lost; pollers cut by commit version: [[arrivalsSince]],
+    * [[changeFeed]] or [[graft.cdc.CdcPipeline.follow]].
     *
     * Scale shape: the manifest LSN ranges prune the scan to candidate
     * files BEFORE any Spark job — O(new data), not O(table). Pruned LWW
@@ -1124,25 +1125,8 @@ class LakeTable(val spark: SparkSession, val dir: String) {
       : DataFrame =
     readFiles(snap, arrivalFiles(snap, sinceVersion))
 
-  /** Time-travel diff: every key whose winning version changed between
-    * snapshot `fromVersion` and snapshot `toVersion` (default: current),
-    * with `__lsn`/`__op` retained. Exactly [[readSince]] cut at the older
-    * snapshot's high LSN — LSNs are the table's total modification order,
-    * so "changed after v1" ⇔ "winner's LSN above v1's high".
-    *
-    * PRECONDITION (inherited from the LSN cut): per-key arrival order
-    * must respect LSN order — a key's winning event must never arrive in
-    * a commit AFTER `fromVersion` carrying an LSN at or below
-    * `fromVersion`'s high water (true of any in-order WAL/binlog tail;
-    * NOT true of arbitrarily shuffled redelivery). For windows robust to
-    * arbitrary disorder use [[changeFeed]] / [[arrivalsSince]], which cut
-    * by commit version. */
-  def changesBetween(fromVersion: Long, toVersion: Option[Long] = None)
-      : DataFrame =
-    readSince(highLsn(snapshotAt(fromVersion)), toVersion)
-
   /** Typed change feed between two snapshots — the Delta-CDF / Debezium
-    * envelope shape of [[changesBetween]]: each changed key is emitted as
+    * envelope shape of a time-travel diff: each changed key is emitted as
     * row(s) in `toVersion`'s user schema plus `_change_type` ∈
     * {`insert`, `update_preimage`, `update_postimage`, `delete`} and
     * `_lsn` (the LSN of the change winner — pre- and post-image rows of

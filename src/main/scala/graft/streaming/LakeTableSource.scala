@@ -127,9 +127,6 @@ object GraftOffset {
   *    when its LSNs sit below the cut. From there the stream tails by
   *    commit version, so late low-LSN arrivals AFTER attach are
   *    delivered.
-  *  - a `followOnce`-driven table uses consumed-source-versions as epoch
-  *    ids; this source uses Spark's own micro-batch ids — don't mix the
-  *    two sync mechanisms on one destination table.
   *  - `.option("maxLsnsPerTrigger", n)` caps the LSN range per catch-up
   *    micro-batch (≈ an event cap for dense LSNs): a from-scratch
   *    bootstrap of a 10^10-event table arrives as bounded batches, not

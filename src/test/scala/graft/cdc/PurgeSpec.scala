@@ -88,10 +88,11 @@ class PurgeSpec extends SparkSpec {
     val t = seeded("purge-follow-src")
     val dst = LakeTable.createTable(spark, tmpDir("purge-follow-dst"),
       Schemas.transcript, 4)
-    CdcPipeline.followOnce(t, dst)
+    val ckpt = tmpDir("purge-follow-ckpt")
+    CdcPipeline.follow(t, dst, ckpt)
     val victims = someConvs(t, 2)
     Purge.purgeConversations(t, victims)
-    CdcPipeline.followOnce(t, dst)
+    CdcPipeline.follow(t, dst, ckpt)
     assert(dst.read().filter(col("conv_id").isInCollection(victims)).isEmpty,
       "follower did not converge through the purge tombstones")
     assert(dst.read().collect().map(_.toSeq).toSet ==

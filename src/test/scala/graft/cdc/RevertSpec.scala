@@ -73,14 +73,15 @@ class RevertSpec extends SparkSpec {
     val t = freshTable("revsrc")
     val dst = LakeTable.createTable(spark, tmpDir("revdst"),
       Schemas.transcript, 4)
-    CdcPipeline.followOnce(t, dst)
+    val ckpt = tmpDir("revckpt")
+    CdcPipeline.follow(t, dst, ckpt)
     t.tag("good")
     MergeApply.merge(t, badBatch(t, 9100000L), 1L)
-    CdcPipeline.followOnce(t, dst) // mirror has consumed the bad batch
+    CdcPipeline.follow(t, dst, ckpt) // mirror has consumed the bad batch
     assert(state(dst.read()) == state(t.read()))
 
     Revert.revertTo(t, "good")
-    CdcPipeline.followOnce(t, dst) // ordinary incremental round
+    CdcPipeline.follow(t, dst, ckpt) // ordinary incremental drain
     assert(state(dst.read()) == state(t.read()),
       "compensating changes must flow to the mirror like any batch")
     assert(state(dst.read()) == state(t.read(

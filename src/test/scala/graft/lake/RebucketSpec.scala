@@ -149,15 +149,16 @@ class RebucketSpec extends SparkSpec {
     val src = seed(tmpDir("rb-follow-src"))
     val dst = LakeTable.createTable(spark, tmpDir("rb-follow-dst"),
       Schemas.transcript, 2) // mirror keeps its own layout
-    graft.cdc.CdcPipeline.followOnce(src, dst)
+    val ckpt = tmpDir("rb-follow-ckpt")
+    graft.cdc.CdcPipeline.follow(src, dst, ckpt)
     assert(state(dst) == state(src))
     MergeApply.rebucket(src, 8)
-    graft.cdc.CdcPipeline.followOnce(src, dst)
+    val v = graft.cdc.CdcPipeline.follow(src, dst, ckpt)
     assert(state(dst) == state(src))
     MergeApply.merge(src, ev(Seq((50L, "U", "tail", 0, "after"))), 2L,
       MergeConfig(writeMode = "mor"))
-    val r = graft.cdc.CdcPipeline.followOnce(src, dst)
-    assert(r.applied && state(dst) == state(src))
+    assert(graft.cdc.CdcPipeline.follow(src, dst, ckpt) > v)
+    assert(state(dst) == state(src))
     assert(dst.snapshot.nBuckets == 2, "follow must not rebucket the mirror")
   }
 }
