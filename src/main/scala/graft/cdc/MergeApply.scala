@@ -112,7 +112,14 @@ final case class MergeConfig(
       * existing intent (idempotent under crash-retry); MoR delta stages
       * compose with commits that land in between (LWW by LSN), COW bucket
       * rewrites conflict at publish if their buckets moved. */
-    wapId: Option[String] = None)
+    wapId: Option[String] = None) {
+  // every surface (library, sink, batch writer) fails on a misspelled
+  // policy here, instead of silently running the default
+  require(writeMode == "mor" || writeMode == "cow",
+    s"writeMode must be mor or cow, got '$writeMode'")
+  require(Set("fail", "quarantine", "off").contains(invalidRows),
+    s"invalidRows must be fail, quarantine, or off, got '$invalidRows'")
+}
 
 /** The MERGE kernel (SURVEY.md §4 item 1, §7.1 item 4): applies one
   * micro-batch of change events to a [[LakeTable]] as an idempotent
@@ -161,25 +168,6 @@ object MergeApply {
     batch.select(cols ++ Seq(
       col("lsn").cast(LongType).as("__lsn"),
       when(col("op") === "D", lit("D")).otherwise(lit("U")).as("__op")): _*)
-  }
-
-  /** Extract schema-registry events (op = "S") from a v2 batch and apply
-    * them to the table in LSN order (idempotently — safe under
-    * redelivery). Returns the data-only remainder of the batch. Feeds
-    * without the `extras` envelope column skip the scan entirely, so the
-    * v1 hot path is untouched.
-    *
-    * This EAGER detection pays one dedicated Spark action per v2 batch;
-    * it is used by the bulk [[append]] path, where one extra planning
-    * action is noise against the load itself. The per-epoch [[merge]]
-    * hot path instead piggybacks detection on an action it already runs
-    * (see [[mergeAttempt]]). */
-  def applySchemaEvents(table: LakeTable, batch: DataFrame): DataFrame = {
-    if (!batch.columns.contains("extras")) return batch
-    val events = batch.filter(col("op") === "S")
-      .select(col("lsn"), col("text")).collect().sortBy(_.getLong(0))
-    events.foreach(r => SchemaRegistry(table, r.getString(1)))
-    if (events.isEmpty) batch else batch.filter(col("op") =!= "S")
   }
 
   /** The table's event-time column for watermark/late-data stats —
@@ -233,7 +221,7 @@ object MergeApply {
   }
 
   /** Route an epoch id into the commit's global-epoch or app-txn slot. */
-  private def epochArgs(cfg: MergeConfig, epochId: Long)
+  private[graft] def epochArgs(cfg: MergeConfig, epochId: Long)
       : (Option[Long], Option[(String, Long)]) = cfg.txnApp match {
     case Some(app) => (None, Some(app -> epochId))
     case None => (Some(epochId), None)
@@ -272,7 +260,7 @@ object MergeApply {
   /** Read the schema-event probe: (lsn, payload) of every op="S" row the
     * observed action saw. Collecting registry rows on the driver is
     * bounded by design — schema changes are a handful of events in
-    * 10^10, the same assumption the eager path's collect makes. */
+    * 10^10, the same assumption mergeGuarded's eager fallback makes. */
   private def probeEvents(obs: Option[org.apache.spark.sql.Observation])
       : Seq[(Long, String)] =
     // a zero-row batch runs zero tasks, so the observation resolves to an
@@ -330,9 +318,6 @@ object MergeApply {
   private def validationWrap(dataBatch: DataFrame, userSchema: StructType,
       cfg: MergeConfig)
       : (DataFrame, Option[org.apache.spark.sql.Observation]) = {
-    require(Set("fail", "quarantine", "off").contains(cfg.invalidRows),
-      s"invalidRows must be fail, quarantine, or off, got " +
-        s"'${cfg.invalidRows}'")
     if (cfg.invalidRows == "off") (dataBatch, None)
     else {
       val bad = invalidReasonExpr(dataBatch, userSchema).isNotNull
@@ -413,7 +398,25 @@ object MergeApply {
     * as [[graft.lake.EpochSupersededException]]; the loser's unpublished
     * files are vacuumOrphans' to reclaim). */
   def merge(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult = {
+      cfg: MergeConfig = MergeConfig()): MergeResult =
+    land(table, batch, epochId, cfg, replace = false)
+
+  /** Atomic whole-table overwrite: ONE commit that both retires every
+    * bucket and registers the batch (the truncate-then-load two-commit
+    * shape publishes an empty table to concurrent readers between the
+    * commits, and a crash between them loses the data). Runs [[merge]]'s
+    * guard, retry loop and attempt — same envelope, validation, epoch,
+    * checksum and WAP contract — except that its one write action
+    * LWW-resolves the batch ([[LakeTable.lwwResolve]]) and lands it as
+    * `base` files, one version per key, no MoR resolution needed on read.
+    * A zero-row batch empties the table. Backs `SaveMode.Overwrite` in
+    * [[graft.lake.GraftBatchWrite]]. */
+  def replace(table: LakeTable, batch: DataFrame, epochId: Long,
+      cfg: MergeConfig = MergeConfig()): MergeResult =
+    land(table, batch, epochId, cfg, replace = true)
+
+  private def land(table: LakeTable, batch: DataFrame, epochId: Long,
+      cfg: MergeConfig, replace: Boolean): MergeResult = {
     val t0 = System.nanoTime()
     val snap0 = table.snapshot
     if (alreadyCommitted(snap0, epochId, cfg)) {
@@ -438,12 +441,12 @@ object MergeApply {
     // connectors.py:73-93, pipeline.py:338-341)
     val (fpRows, fp) =
       if (cfg.inputChecksumGate) batchFingerprint(batch) else (0L, "")
-    // a copy-on-write attempt that raced another writer into the same
-    // buckets must RECOMPUTE, not rebase — the bucket contents it merged
-    // are stale. Recompute is the whole-operation retry of the Iceberg
-    // commit model; each attempt reads a fresh snapshot. Two COW writers
-    // in steady contention can invalidate each other indefinitely (a
-    // recompute takes about as long as the peer's commit interval), so
+    // a copy-on-write or replace attempt that raced another writer into
+    // buckets it retires must RECOMPUTE, not rebase — the bucket contents
+    // it built on are stale. Recompute is the whole-operation retry of the
+    // Iceberg commit model; each attempt reads a fresh snapshot. Two COW
+    // writers in steady contention can invalidate each other indefinitely
+    // (a recompute takes about as long as the peer's commit interval), so
     // the retry backs off with jitter to desynchronize them. (MoR appends
     // never take this path — they rebase inside commit.) The checksum-gate
     // skip commit sits INSIDE the loop so a conflict on the 0-row commit
@@ -469,7 +472,7 @@ object MergeApply {
               staged = c.isEmpty)
           }
         }
-        return mergeGuarded(table, batch, epochId, cfg, t0, fp)
+        return mergeGuarded(table, batch, epochId, cfg, t0, fp, replace)
       } catch {
         case _: graft.lake.EpochSupersededException =>
           return MergeResult(applied = false, table.snapshot.version, 0L, 0L,
@@ -485,11 +488,12 @@ object MergeApply {
   }
 
   private def mergeGuarded(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, checksum: String = ""): MergeResult = {
+      cfg: MergeConfig, t0: Long, checksum: String,
+      replace: Boolean): MergeResult = {
     val hasExtras = batch.columns.contains("extras")
     val attempt =
       try mergeAttempt(table, batch, epochId, cfg, t0, probe = hasExtras,
-        checksum = checksum)
+        checksum, replace)
       catch {
         case e: Throwable
             if hasExtras && scala.util.control.NonFatal(e) &&
@@ -518,7 +522,7 @@ object MergeApply {
         // attempt was committed.
         events.sortBy(_._1).foreach(e => SchemaRegistry(table, e._2))
         mergeAttempt(table, batch, epochId, cfg, t0, probe = false,
-          checksum = checksum)
+          checksum, replace)
           .getOrElse(throw new IllegalStateException(
             "schema probe fired on the retry attempt"))
     }
@@ -533,6 +537,8 @@ object MergeApply {
     * base files; copy-on-write instead folds every touched bucket (its
     * live files plus the new deltas) with the compaction kernel and
     * commits the fold in place of the deltas, replacing those buckets.
+    * Under `replace` the write action LWW-resolves the batch and writes it
+    * as base files instead, committed with EVERY bucket retired.
     *
     * When `probe` is set the batch MAY contain schema-registry rows
     * (op = "S"): rather than paying a dedicated detection action up front
@@ -544,8 +550,8 @@ object MergeApply {
     * 10^10, so the common v2 path pays zero extra actions and the rare
     * path pays one redo. */
   private def mergeAttempt(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String = "")
-      : Either[Seq[(Long, String)], MergeResult] = {
+      cfg: MergeConfig, t0: Long, probe: Boolean, checksum: String,
+      replace: Boolean): Either[Seq[(Long, String)], MergeResult] = {
     val hasExtras = batch.columns.contains("extras")
     val (dataBatch0, probeObs) =
       if (!hasExtras) (batch, None)
@@ -599,15 +605,27 @@ object MergeApply {
     // empty, the largest carrying 3-4 buckets — idling cores in the
     // epoch's dominant stage; identity alignment keeps every write task
     // equally loaded and each task writes exactly one __bucket=N dir.
-    val deltaFiles = writeBuckets(table,
-      observed.repartition(nB, col("conv_id")), salt = 1, snap,
-      prePartitioned = true, kind = "delta")
+    // A replace resolves the batch to one version per key on the way
+    // (the same exchange plus a window) and lands base files.
+    val written =
+      if (replace) writeBuckets(table, LakeTable.lwwResolve(observed, nB),
+        salt = 1, snap, prePartitioned = true, kind = "base")
+      else writeBuckets(table, observed.repartition(nB, col("conv_id")),
+        salt = 1, snap, prePartitioned = true, kind = "delta")
     lap("delta-write")
+    // a replace retires the FULL bucket space, not just buckets with live
+    // files at the read snapshot: rebase's conflict signature covers
+    // exactly the retired buckets, so a concurrent append into a bucket
+    // that was EMPTY here must land in the signature too — otherwise its
+    // rows would silently survive the whole-table replace while the same
+    // append into a populated bucket gets conflict-retried
+    val replaced = if (replace) (0 until nB).toSet else Set.empty[Int]
+    val carried = if (replace) 0 else snap.files.size
     // the schema probe rode the same write action; abort before commit
     // if registry rows surfaced, discarding the uncommitted delta files
     val sev = probeEvents(probeObs)
     if (sev.nonEmpty) {
-      discard(table, deltaFiles)
+      discard(table, written)
       return Left(sev)
     }
     // a zero-output batch (a truly empty micro-batch — streaming restarts
@@ -622,8 +640,8 @@ object MergeApply {
     // pre-widen, so the filter empties the batch). The epoch must still
     // land — the committed-epoch watermark stays CONTIGUOUS (a skipped
     // epoch id would hold the watermark back forever and defeat the
-    // bounded recent-set guard).
-    if (deltaFiles.isEmpty) {
+    // bounded recent-set guard). A replace still retires every bucket.
+    if (written.isEmpty) {
       val sevE =
         if (probeObs.isEmpty) Nil
         else batch.filter(col("op") === "S").select(col("lsn"), col("text"))
@@ -636,9 +654,9 @@ object MergeApply {
             invalidReasonExpr(dataBatch0, snap.userSchema).isNotNull).count(),
           Nil)
       val entry = LineageEntry(epochId, snap.version + 1, 0L, 0L, Nil, 0,
-        snap.files.size, -1L, "", (System.nanoTime() - t0) / 1000000L,
+        carried, -1L, "", (System.nanoTime() - t0) / 1000000L,
         inputChecksum = checksum, rejectedEvents = rejected)
-      val c = stageOrCommit(table, snap, Nil, Set.empty, epochId, cfg, entry)
+      val c = stageOrCommit(table, snap, Nil, replaced, epochId, cfg, entry)
       return Right(MergeResult(applied = c.nonEmpty,
         c.fold(snap.version)(_.version), 0L, 0L, Nil,
         (System.nanoTime() - t0) / 1000000L, staged = c.isEmpty,
@@ -651,10 +669,10 @@ object MergeApply {
     val rejected = resolveInvalid(table, dataBatch0, snap.userSchema,
       epochId, cfg, invalidObs.flatMap(_.get.get("invalid"))
         .flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L),
-      deltaFiles)
+      written)
     val m = obs.get
     val batchRows = m("rows").asInstanceOf[Long]
-    val buckets = deltaFiles.map(_.bucket).distinct.sorted
+    val buckets = written.map(_.bucket).distinct.sorted
     def entry(filesWritten: Int, filesCarried: Int) = LineageEntry(epochId,
       snap.version + 1, batchRows, batchRows, buckets, filesWritten,
       filesCarried, Option(m("maxLsn")).map(_.asInstanceOf[Long])
@@ -663,17 +681,18 @@ object MergeApply {
       lateEvents = m.get("late").flatMap(Option(_))
         .map(_.asInstanceOf[Long]).getOrElse(0L),
       minLsn = Option(m("minLsn")).map(_.asInstanceOf[Long]).getOrElse(-1L),
-      // delta files hold exactly this batch, so their manifest entries ARE
-      // the batch's per-partition applied rows + LSN ranges (footer stats)
-      // — in both modes, even though COW commits the fold instead
-      partitions = partitionsOf(deltaFiles), inputChecksum = checksum,
+      // the written files hold exactly this batch (a replace's resolved to
+      // one version per key), so their manifest entries ARE its
+      // per-partition rows + LSN ranges (footer stats) — even when COW
+      // commits the fold instead
+      partitions = partitionsOf(written), inputChecksum = checksum,
       watermarkCol = tsCol.getOrElse(""), rejectedEvents = rejected)
     def result(committed: Option[Snapshot], version: Long) =
       MergeResult(applied = committed.nonEmpty, version, batchRows, batchRows,
         buckets, (System.nanoTime() - t0) / 1000000L,
         staged = committed.isEmpty, rejectedEvents = rejected)
 
-    if (cfg.writeMode == "cow") {
+    if (cfg.writeMode == "cow" && !replace) {
       // fold each touched bucket — its live files plus the deltas — and
       // commit (or stage) the fold in place of both, replacing the
       // buckets. The fold carries this epoch's arrivals, so it is stamped
@@ -684,17 +703,17 @@ object MergeApply {
       val touched = buckets.toSet
       try {
         val folded = foldBuckets(table, snap,
-          snap.files.filter(f => touched.contains(f.bucket)) ++ deltaFiles,
+          snap.files.filter(f => touched.contains(f.bucket)) ++ written,
           cfg.maxRowsPerFile).map(_.copy(rewrite = true))
         lap("cow-fold")
-        val carried = snap.files.count(f => !touched.contains(f.bucket))
+        val untouched = snap.files.count(f => !touched.contains(f.bucket))
         val c = stageOrCommit(table, snap, folded, touched, epochId, cfg,
-          entry(folded.size, carried))
+          entry(folded.size, untouched))
         return Right(result(c, c.fold(snap.version)(_.version)))
-      } finally discard(table, deltaFiles)
+      } finally discard(table, written)
     }
-    stageOrCommit(table, snap, deltaFiles, Set.empty, epochId, cfg,
-      entry(deltaFiles.size, snap.files.size)) match {
+    stageOrCommit(table, snap, written, replaced, epochId, cfg,
+      entry(written.size, carried)) match {
       // staged: nothing committed — the staged deltas fold (if over
       // threshold) in the first post-publish epoch's sweep
       case None => Right(result(None, snap.version))
@@ -884,138 +903,6 @@ object MergeApply {
       stamped.map(_.bucket).distinct.sorted, stamped.size, 0, -1L, "", 0L)
     table.commit(snap, stamped, snap.files.map(_.bucket).toSet, None,
       Some(entry), newNBuckets = Some(newN))
-  }
-
-  /** Insert-only fast path (≈ the reference's Express-Loader bulk append,
-    * reference: engine/post_processors.py:18-63, and `method='insert'`,
-    * reference: engine/wprdc_etl/pipeline/loaders.py:370): write the batch
-    * as new files without reading current data. Correct only when keys are
-    * known fresh (e.g. time-gap incremental loads). Still LWW-dedups within
-    * the batch and keeps the epoch guard. */
-  def append(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult =
-    appendOrReplace(table, batch, epochId, cfg, replaceExisting = false)
-
-  /** Atomic whole-table overwrite: ONE commit that both retires every
-    * live file and registers the batch's winners (the truncate-then-load
-    * two-commit shape publishes an empty table to concurrent readers
-    * between the commits, and a crash between them loses the data).
-    * Same envelope/validation/epoch-guard contract as [[append]]; the
-    * within-batch LWW dedup leaves one version per key, so the files
-    * land as `base` (no MoR resolution needed on read). Backs
-    * `SaveMode.Overwrite` in [[graft.lake.GraftBatchWrite]]. */
-  def replace(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig = MergeConfig()): MergeResult =
-    appendOrReplace(table, batch, epochId, cfg, replaceExisting = true)
-
-  private def appendOrReplace(table: LakeTable, batch: DataFrame,
-      epochId: Long, cfg: MergeConfig, replaceExisting: Boolean)
-      : MergeResult = {
-    require(cfg.wapId.isEmpty,
-      "write-audit-publish staging is a merge-path feature (wapId is " +
-        "ignored nowhere): route audited loads through merge()")
-    val t0 = System.nanoTime()
-    val snap0 = table.snapshot
-    if (alreadyCommitted(snap0, epochId, cfg))
-      return MergeResult(applied = false, snap0.version, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    // duplicate-INPUT suppression — same gate as [[merge]], and the same
-    // conflict-retry loop: a CommitConflictException (schema-version
-    // change mid-flight, retry exhaustion in the rebase) must retry with
-    // a fresh snapshot like every other path, not escape through
-    // foreachBatch and kill the stream. A failed attempt's written files
-    // are unpublished orphans — vacuumOrphans' job, same as COW retries.
-    val (fpRows, fp) =
-      if (cfg.inputChecksumGate) batchFingerprint(batch) else (0L, "")
-    var conflictRetries = 0
-    while (true) {
-      try return appendOnce(table, batch, epochId, cfg, t0, fpRows, fp,
-        replaceExisting)
-      catch {
-        case _: graft.lake.EpochSupersededException =>
-          return MergeResult(applied = false, table.snapshot.version, 0L, 0L,
-            Nil, (System.nanoTime() - t0) / 1000000L)
-        case e: graft.lake.CommitConflictException =>
-          conflictRetries += 1
-          if (conflictRetries > 8) throw e
-          Thread.sleep(
-            (math.min(400, 25 << (conflictRetries - 1)) * math.random()).toLong)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def appendOnce(table: LakeTable, batch: DataFrame, epochId: Long,
-      cfg: MergeConfig, t0: Long, fpRows: Long, fp: String,
-      replaceExisting: Boolean = false): MergeResult = {
-    // every attempt re-reads the snapshot: a racer's epoch or checksum
-    // commit between attempts is honored
-    val snap0 = table.snapshot
-    if (alreadyCommitted(snap0, epochId, cfg))
-      return MergeResult(applied = false, snap0.version, 0L, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    if (fp.nonEmpty && lastChecksum(snap0).contains(fp)) {
-      val entry = LineageEntry(epochId, snap0.version + 1, fpRows, 0L, Nil,
-        0, snap0.files.size, -1L, "",
-        (System.nanoTime() - t0) / 1000000L, inputChecksum = fp)
-      val (eid, txn) = epochArgs(cfg, epochId)
-      val c = table.commit(snap0, Nil, Set.empty, eid, Some(entry), txn = txn)
-      return MergeResult(applied = false, c.version, fpRows, 0L, Nil,
-        (System.nanoTime() - t0) / 1000000L)
-    }
-    val dataBatch0 = applySchemaEvents(table, batch)
-    val snap = table.snapshot
-    // same envelope-validation contract as merge(): the insert fast path
-    // must not silently append a null-keyed or op-garbage event either
-    val (dataBatch, invalidObs) =
-      validationWrap(dataBatch0, snap.userSchema, cfg)
-    val norm = normalize(dataBatch, snap.userSchema)
-      .withColumn("__bucket", LakeTable.bucketExpr(snap.nBuckets))
-    // registered as deltas: append guarantees nothing about key overlap
-    // with existing files, so readers must LWW-resolve (and compaction
-    // may fold) — identical to the reference's insert method being
-    // correct only "because date-gap logic makes it idempotent per-day"
-    // (reference: engine/payload/united_way/211.py:286-293)
-    val newFiles = writeBuckets(table,
-      LakeTable.lwwResolve(norm, snap.nBuckets), 1, snap,
-      prePartitioned = true,
-      kind = if (replaceExisting) "base" else "delta")
-    val rejected =
-      if (newFiles.nonEmpty)
-        resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-          invalidObs.flatMap(_.get.get("invalid")).flatMap(Option(_))
-            .map(_.asInstanceOf[Long]).getOrElse(0L), newFiles)
-      else if (invalidObs.isEmpty) 0L
-      else // zero-output write: observations may be unresolved (see merge)
-        resolveInvalid(table, dataBatch0, snap.userSchema, epochId, cfg,
-          dataBatch0.where(invalidReasonExpr(dataBatch0, snap.userSchema)
-            .isNotNull).count(), Nil)
-    val rows = newFiles.map(_.rows).sum
-    val parts = partitionsOf(newFiles)
-    val appMins = parts.map(_.minLsn).filter(_ >= 0)
-    val entry = LineageEntry(epochId, snap.version + 1, rows, rows,
-      newFiles.map(_.bucket).distinct.sorted, newFiles.size, snap.files.size,
-      if (parts.isEmpty) -1L else parts.map(_.maxLsn).max, "",
-      (System.nanoTime() - t0) / 1000000L,
-      minLsn = if (appMins.isEmpty) -1L else appMins.min,
-      partitions = parts, inputChecksum = fp, rejectedEvents = rejected)
-    // EpochSuperseded/CommitConflict propagate to append()'s retry loop.
-    // replaceExisting retires the FULL bucket space, not just buckets
-    // with live files at the read snapshot: rebase's conflict signature
-    // covers exactly the retired buckets, so a concurrent append into a
-    // bucket that was EMPTY here must land in the signature too —
-    // otherwise its rows would silently survive the atomic
-    // whole-table-replace contract of [[replace]] while the same append
-    // into a populated bucket gets conflict-retried. Retiring an empty
-    // bucket is free (no files dropped) and makes the outcome uniform.
-    val replaced =
-      if (replaceExisting) (0 until snap.nBuckets).toSet
-      else Set.empty[Int]
-    val (eid, txn) = epochArgs(cfg, epochId)
-    val c = table.commit(snap, newFiles, replaced, eid, Some(entry), txn = txn)
-    MergeResult(applied = true, c.version, rows, rows,
-      newFiles.map(_.bucket).distinct.sorted,
-      (System.nanoTime() - t0) / 1000000L, rejectedEvents = rejected)
   }
 
   /** Write `df` (user cols + __lsn + __op + __bucket) under

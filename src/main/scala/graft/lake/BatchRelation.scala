@@ -146,7 +146,7 @@ final class GraftBatchRelation(
     * `USING graft-table` view — SQL's route into [[GraftBatchWrite]]
     * (plain rows: auto-LSN key replacement; overwrite: the atomic
     * whole-table replace). The view's declared OPTIONS (writeMode,
-    * invalidRows, method, txnAppId/batchId, …) travel with the write —
+    * invalidRows, txnAppId/batchId, …) travel with the write —
     * accepting an option at view creation and dropping it at write
     * time would silently change semantics. An `at`-pinned (release)
     * view is read-only. */
@@ -352,16 +352,16 @@ final class GraftMetaRelation(
 
 /** `df.write.format("graft-table")` — the batch write path.
   *
-  * Two input shapes:
+  * Both input shapes land through [[graft.cdc.MergeApply.merge]]:
   *  - **change-event envelope** (columns `lsn` + `op` present): applied
-  *    verbatim through [[graft.cdc.MergeApply.merge]] (default) or the
-  *    insert fast path (`.option("method", "insert")`).
+  *    verbatim.
   *  - **plain rows** (no envelope): wrapped as insert events with LSNs
   *    assigned above the table's high-water mark, so under LWW the
   *    written rows replace any existing versions of their keys — the
   *    reference's Express-Loader bulk load shape (reference:
-  *    engine/post_processors.py:18-63). The fast path registers delta
-  *    files, so readers LWW-resolve key overlap correctly.
+  *    engine/post_processors.py:18-63). Merge writes them as delta files,
+  *    so readers LWW-resolve key overlap and repeated loads compact like
+  *    any other epoch.
   *
   * `SaveMode` semantics: `Append` loads into the (possibly new) table;
   * `Overwrite` replaces the table's contents in ONE atomic commit
@@ -393,14 +393,14 @@ object GraftBatchWrite {
     // keys are admitted because a view's options travel with INSERT INTO
     // (GraftBatchRelation.insert forwards viewOptions here).
     val knownKeys = Set(
-      "path", "method", "writemode", "invalidrows", "nbuckets",
+      "path", "writemode", "invalidrows", "nbuckets",
       "mergeschema", "txnappid", "batchid",
       "at", "meta", "sincelsn", "changesfrom", "changesto")
     val unknownKeys =
       parameters.keys.filterNot(k => knownKeys(k.toLowerCase)).toSeq.sorted
     require(unknownKeys.isEmpty,
       s"unknown graft-table write option(s): ${unknownKeys.mkString(", ")}" +
-        " — known: path, method, writeMode, invalidRows, nBuckets, " +
+        " — known: path, writeMode, invalidRows, nBuckets, " +
         "mergeSchema, txnAppId, batchId (plus read-side at/meta/" +
         "sinceLsn/changesFrom/changesTo on a view)")
     val hasLsn = data.columns.contains("lsn")
@@ -412,32 +412,30 @@ object GraftBatchWrite {
         "the stray column writes it as plain data (auto-envelope would " +
         "silently overwrite its values)")
     val hasEnvelope = hasLsn && hasOp
-    val method =
-      parameters.getOrElse("method", if (hasEnvelope) "upsert" else "insert")
-    require(method == "upsert" || method == "insert",
-      s"method must be upsert or insert, got '$method'")
-    val writeMode = parameters.getOrElse("writeMode", "mor")
-    require(writeMode == "mor" || writeMode == "cow",
-      s"writeMode must be mor or cow, got '$writeMode'")
-    val invalid = parameters.getOrElse("invalidRows", "fail")
-    require(Set("fail", "quarantine", "off").contains(invalid),
-      s"invalidRows must be fail, quarantine, or off, got '$invalid'")
     val nBucketsOpt = parameters.get("nBuckets").map(_.toInt)
     val mergeSchema = parameters.get("mergeSchema").exists(_.toBoolean)
     // txnAppId/batchId travel as a pair — a lone batchId silently
     // falling back to a fresh slot would drop the replay protection the
-    // caller asked for
-    val idem: Option[(String, Long)] =
+    // caller asked for. Without the pair, each anonymous write gets a
+    // fresh slot: a re-run re-applies (see scaladoc); slot retention
+    // evicts the oldest identities, so churn is bounded
+    val (txnApp, batchId) =
       (parameters.get("txnAppId"), parameters.get("batchId")) match {
-        case (Some(id), Some(b)) => Some((id, b.toLong))
+        case (Some(id), Some(b)) => (id, b.toLong)
         case (Some(_), None) => throw new IllegalArgumentException(
           """.option("txnAppId", …) needs .option("batchId", <n>) — """ +
             "the pair is the idempotence key for replayed batch writes")
         case (None, Some(_)) => throw new IllegalArgumentException(
           """.option("batchId", …) needs .option("txnAppId", <id>) — """ +
             "without the slot id the batch id protects nothing")
-        case (None, None) => None
+        case (None, None) =>
+          ("batch:" + java.util.UUID.randomUUID().toString, 0L)
       }
+    // MergeConfig validates writeMode and invalidRows itself
+    val cfg = graft.cdc.MergeConfig(
+      writeMode = parameters.getOrElse("writeMode", "mor"),
+      txnApp = Some(txnApp),
+      invalidRows = parameters.getOrElse("invalidRows", "fail"))
 
     var table = LakeTable.load(spark, dir)
     val existed = table.exists
@@ -505,15 +503,6 @@ object GraftBatchWrite {
           .withColumn("op", lit("I"))
       }
 
-    val (txnApp, batchId) = idem match {
-      case Some((id, b)) => (Some(id), b)
-      case None =>
-        // fresh slot per write: a re-run re-applies (see scaladoc); slot
-        // retention evicts the oldest identities, so churn is bounded
-        (Some("batch:" + java.util.UUID.randomUUID().toString), 0L)
-    }
-    val cfg = graft.cdc.MergeConfig(writeMode = writeMode, txnApp = txnApp,
-      invalidRows = invalid)
     // Overwrite on an existing table is ONE atomic commit (retire every
     // live file + register the batch) — never truncate-then-load, which
     // publishes an empty table to concurrent readers and, under a
@@ -523,8 +512,6 @@ object GraftBatchWrite {
     // no-op, data intact.
     if (existed && mode == SaveMode.Overwrite)
       graft.cdc.MergeApply.replace(table, batch, batchId, cfg)
-    else if (method == "insert")
-      graft.cdc.MergeApply.append(table, batch, batchId, cfg)
     else graft.cdc.MergeApply.merge(table, batch, batchId, cfg)
     new GraftBatchRelation(sqlContext, dir, None, parameters)
   }

@@ -157,11 +157,12 @@ final case class LineageEntry(
     rejectedEvents: Long = 0L,
     /** Low end of the batch's LSN range — with [[maxLsn]] this is the
       * "source offset range" the north rule asks lineage to carry
-      * (-1 when not computed, e.g. blind appends / compactions). */
+      * (-1 when not computed, e.g. compactions). */
     minLsn: Long = -1L,
     /** Per-partition breakdown: rows applied + LSN range per hash-bucket
       * touched by this commit (empty for metadata-only commits and
       * compactions). The sum of `partitions.rows` equals [[rowsApplied]]
+      * (a replace's is at most it: its files hold one version per key)
       * and each range nests inside [minLsn, maxLsn]. */
     partitions: Seq[BucketLineage] = Nil,
     /** Content fingerprint of the batch this commit applied ("" when the
@@ -1085,7 +1086,7 @@ class LakeTable(val spark: SparkSession, val dir: String) {
     * bucket rewrites) and pre-`addedV` manifests contain carried-over
     * rows too — a superset the consumer must absorb. The pre-`addedV`
     * case (`addedV < 0`) is BOUNDED: the first DATA-PATH commit after
-    * upgrade (anything through [[commitOnce]] — merge, append, compact,
+    * upgrade (anything through [[commitOnce]] — merge, replace, compact,
     * truncate, addColumn; NOT the metadata-only publishes like
     * setProperty/linkResource, which bypass stamping) stamps every
     * unstamped entry as a fold at that commit, so the conservative
@@ -2011,7 +2012,7 @@ object LakeTable {
     pmod(hash(col("conv_id")), lit(nBuckets)).cast(IntegerType)
 
   /** LWW-resolve a raw frame that may hold several versions per key
-    * (merge-on-read deltas, an append batch): keep the max-__lsn row per
+    * (merge-on-read deltas, a replace batch): keep the max-__lsn row per
     * (conv_id, turn_idx). Shuffle shape: ONE exchange to
     * `repartition(nBuckets, conv_id)` — the exact bucket function
     * (pmod(murmur3(conv_id), nBuckets)), so shuffle partition i holds

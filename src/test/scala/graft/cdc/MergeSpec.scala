@@ -117,13 +117,24 @@ class MergeSpec extends SparkSpec {
     assert(compacted.snapshot.files.forall(_.kind == "base"))
     assert(finalState(compacted) == oracle)
 
-    // append is correct on fresh keys: split the log by conversation so
-    // the two batches share no key
+    // a load of fresh keys: split the log by conversation so the two
+    // batches share no key
     val app = fresh("append")
     val half = pmod(hash(col("conv_id")), lit(2)) === 0
-    MergeApply.append(app, log.filter(half), 0L)
-    MergeApply.append(app, log.filter(!half), 1L)
+    MergeApply.merge(app, log.filter(half), 0L)
+    MergeApply.merge(app, log.filter(!half), 1L)
     assert(finalState(app) == oracle)
+  }
+
+  test("MergeConfig rejects an unknown writeMode or invalidRows at construction") {
+    // a case variant must not silently run the default (MoR / fail)
+    val e = intercept[IllegalArgumentException](MergeConfig(writeMode = "Cow"))
+    assert(e.getMessage.contains("writeMode"))
+    val e2 = intercept[IllegalArgumentException](
+      MergeConfig(invalidRows = "Quarantine"))
+    assert(e2.getMessage.contains("invalidRows"))
+    intercept[IllegalArgumentException](MergeConfig().copy(writeMode = "append"))
+    assert(MergeConfig(writeMode = "cow", invalidRows = "off").writeMode == "cow")
   }
 
   test("bucket pruning: untouched buckets carry over by reference (cow)") {

@@ -174,12 +174,12 @@ class ValidationSpec extends SparkSpec {
     assert(lines2 == Seq("[table] no rejects"))
   }
 
-  test("append (insert fast path) validates the same envelope contract") {
+  test("replace validates the same envelope contract as merge") {
     val dir = tmpDir("val-append")
     val table = LakeTable.createTable(spark, dir, Schemas.transcript,
       nBuckets = 2)
     intercept[PoisonEventException] {
-      MergeApply.append(table,
+      MergeApply.replace(table,
         Seq((1L, "I", "a", 0, "user", "x"),
           (2L, "I", null.asInstanceOf[String], 0, "user", "y"))
           .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text"),
@@ -188,7 +188,7 @@ class ValidationSpec extends SparkSpec {
     assert(table.read().count() == 0L, "nothing may commit")
     // quarantine applies the valid remainder and dead-letters the rest
     val q = MergeConfig(invalidRows = "quarantine")
-    val res = MergeApply.append(table,
+    val res = MergeApply.replace(table,
       Seq((1L, "I", "a", 0, "user", "x"),
         (2L, "I", null.asInstanceOf[String], 0, "user", "y"))
         .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 
 import graft.SparkSpec
-import graft.cdc.MergeApply
+import graft.cdc.{MergeApply, MergeConfig}
 import graft.gen.{ChangeLogGen, GenConfig}
 import graft.model.Schemas
 
@@ -304,6 +304,40 @@ class BatchRelationSpec extends SparkSpec {
       col("turn_idx") === existingTurn).select("text").as[String].head() ==
       "REWRITTEN")
     assert(after.filter(col("conv_id") === "brand-new-conv").count() == 1)
+  }
+
+  test("repeated plain-row batch writes compact like any merge") {
+    val dir = tmpDir("br-repeat")
+    val limit = MergeConfig().maxDeltaFilesPerBucket
+    val writes = limit + 2
+    (0 until writes).foreach { i =>
+      (0 until 8).map(c => (s"rc$c", i, "user", s"v$i", null: String,
+        Timestamp.valueOf("2026-03-13 00:00:00")))
+        .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .write.format("graft-table").option("nBuckets", "2")
+        .mode(SaveMode.Append).save(dir)
+    }
+    val t = LakeTable.load(spark, dir)
+    val perBucket = t.snapshot.files.groupBy(_.bucket).view
+      .mapValues(_.size).toMap
+    assert(perBucket.nonEmpty && perBucket.values.forall(_ <= limit),
+      s"files per bucket $perBucket exceed $limit")
+    assert(t.read().count() == 8L * writes)
+  }
+
+  test("an Overwrite with a zero-row frame empties the table in one commit") {
+    val (dir, t) = seeded("br-ow-empty")
+    assert(t.read().count() > 0)
+    val v0 = t.snapshot.version
+    Seq.empty[(String, Int, String, String, String, Timestamp)]
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .write.format("graft-table").mode(SaveMode.Overwrite).save(dir)
+    assert(t.snapshot.version == v0 + 1)
+    assert(t.snapshot.files.isEmpty)
+    assert(t.read().count() == 0)
+    assert(t.snapshot.manifests.last.replacedBuckets ==
+      (0 until t.snapshot.nBuckets))
+    assert(t.snapshot.userSchema == Schemas.transcript)
   }
 
   test("envelope batch write: upsert merges, deletes apply") {

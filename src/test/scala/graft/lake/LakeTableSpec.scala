@@ -82,15 +82,16 @@ class LakeTableSpec extends SparkSpec {
     assert(t.read(asOf = Some(v1)).count() == c1)
   }
 
-  test("append fast path registers files without rewriting") {
+  test("a plain-row batch write registers files without rewriting") {
     val dir = tmpDir("lt-append")
     val t = LakeTable.createTable(spark, dir, Schemas.transcript, 4)
-    MergeApply.append(t, ChangeLogGen.changeLogDF(spark, cfg)
+    MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg)
       .filter(col("op") =!= "D"), 0L)
     val files1 = t.snapshot.files.map(_.path).toSet
-    MergeApply.append(t, Seq((123456789L, "I", "apnd", 0, "user", "x",
-      null: String, java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"), 1L)
+    Seq(("apnd", 0, "user", "x", null: String,
+      java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .write.format("graft-table").mode("append").save(dir)
     val files2 = t.snapshot.files.map(_.path).toSet
     assert(files1.subsetOf(files2) && files2.size > files1.size)
   }

@@ -27,6 +27,30 @@ class WapSpec extends SparkSpec {
         ChangeLogGen.deliveredLsn(cc, s)))).toDF()
   }
 
+  test("a staged replace parks invisibly and publishes as one whole-table commit") {
+    val t = LakeTable.createTable(spark, tmpDir("wap-replace"),
+      Schemas.transcript, nBuckets = 4)
+    MergeApply.merge(t, ChangeLogGen.changeLogDF(spark, cfg), 0L)
+    val before = finalState(t)
+    val v0 = t.snapshot.version
+    // an LSN below every live row: only the replace, not LWW, retires them
+    val repl = Seq((1L, "I", "only", 0, "user", "kept", null: String,
+      java.sql.Timestamp.valueOf("2026-03-14 00:00:00")))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val res = MergeApply.replace(t, repl, 1L,
+      MergeConfig(wapId = Some("swap")))
+    assert(res.staged && !res.applied)
+    assert(t.snapshot.version == v0 && finalState(t) == before)
+    assert(t.readStaged("swap").select("conv_id").as[String].collect()
+      .toSeq == Seq("only"))
+    t.publishStaged("swap")
+    assert(t.snapshot.version == v0 + 1 && t.snapshot.isCommitted(1L))
+    assert(t.read().select("conv_id").as[String].collect().toSeq ==
+      Seq("only"))
+    assert(t.snapshot.manifests.last.replacedBuckets == (0 until 4))
+    assert(t.fsck().isEmpty)
+  }
+
   test("stage is invisible, audit sees the would-be state, publish lands it") {
     val direct = LakeTable.createTable(spark, tmpDir("wap-direct"),
       Schemas.transcript, nBuckets = 4)
